@@ -3,7 +3,8 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs
 each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+order-insensitive value-hash); tests/test_oracle_parity.py makes the
+same comparison for every query at sf0.001.
 
 All three functions delegate to the engine package's query registry
 (``spark_kafka_realm_time_data_pipeline_spark.queries.registry``) —

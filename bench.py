@@ -36,7 +36,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
-from spark_kafka_realm_time_data_pipeline_spark.session import get_spark
+from spark_kafka_realm_time_data_pipeline_spark.session import DEFAULT_CPUS, get_spark
 
 
 def compact_line(out: dict) -> str:
@@ -431,11 +431,10 @@ def main() -> None:
             # the main run used to overwrite ONE detail file (r20 lost its
             # 32-core per-query map to the 8-core run); cpus is recorded
             # here and keyed into the per-cpus detail filename below
-            "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+            "cpus": DEFAULT_CPUS,
             # the wall budget this run degraded against, and which lines it
-            # degraded — tools/bench_medians.py REFUSES detail files whose
-            # tail degraded (the r12/r17 fabricated-movers artifact) unless
-            # explicitly overridden
+            # degraded — a detail file whose tail degraded cannot be
+            # compared line by line (the r12/r17 fabricated-movers artifact)
             "budget": budget,
             "degraded": degraded,
             "queries": timings,
@@ -500,9 +499,8 @@ def main() -> None:
     # positions 138+ past the old 720, and exactly those lines "moved").
     # r18 raise: the slowest observed r17 full run walled 1100.7 s at the
     # 148-line headline, and r18 adds two heavy ingest lines — 1440 keeps
-    # ~20% headroom so the degraded-detail refusal in bench_medians stays
-    # an anomaly signal, not a routine trip.  The run records budget +
-    # degraded list; bench_medians.py refuses degraded details.
+    # ~20% headroom so a degraded tail stays an anomaly signal, not a
+    # routine trip.  The run records budget + degraded list.
     for name in names:
         fn = qs[name]
         samples = []

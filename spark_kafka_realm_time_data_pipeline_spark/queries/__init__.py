@@ -35,109 +35,9 @@ def registry() -> dict[str, QuerySpec]:
     from . import curation, llm, reference, relational, streaming, tpch, udfs
 
     merged: dict[str, QuerySpec] = {}
-    # Order decides which entries land in the driver's bounded CORRECTNESS
-    # window (first ~50): rotate the round-2-unchecked LLM/streaming/UDF
-    # families to the front; the relational/reference entries (all green in
-    # CORRECTNESS_r02) rotate behind them.
     for mod in (llm, streaming, udfs, reference, relational, tpch, curation):
         for name, spec in mod.QUERIES.items():
             if name in merged:
                 raise ValueError(f"duplicate query name: {name}")
             merged[name] = spec
-    # Round-19 rotation (the driver checks the first ~50).  Composition is
-    # MECHANICAL — `tools/proof_ledger.py queue 50` at the r19 tree (stale
-    # first, then oldest-proof-first fill); executes VERDICT r18 item 1:
-    # (a) positions 0-24: the STALE set (alphabetical) — 22 staged-index
-    #     consumers restaged by the r19 atomic-staging fix + logic-token
-    #     keys (VERDICT r18 item 2: every query whose closure reaches
-    #     _staged_index / merge_admitted_into_ivf re-proves in this
-    #     window), the NEW sim_index_rebuild (the executed IVF re-train —
-    #     VERDICT r18 item 3) and its late-round acceptance-gate twin
-    #     sim_rebuild_recall (rebuilt-probe dup recall vs brute force),
-    #     the NEW column_profile_approx_bounds and the bounds-upgraded
-    #     approx_distinct (VERDICT r18 item 6);
-    # (b) positions 25-49: the oldest-proof fill — serialize_json (its
-    #     oracle upgraded this round from rows-only to a full JSON string
-    #     check) followed by the 24 oldest r13-proven names (alphabetical;
-    #     streaming_outer_join displaced to the r20 fill by the
-    #     sim_rebuild_recall addition).  The ~16 remaining r13 names take
-    #     the r20 fill: the r19 restage deliberately spent window slots
-    #     on the staging re-proofs, as VERDICT r18 item 2 directed.
-    front = [
-        n
-        for n in (
-            # Round-21 rotation (mechanical, same displacement rule as
-            # r20): the four pair-tier queries whose shared derivation
-            # (prefix_filter_pairs / containment_pairs) changed in the
-            # 8649ceb persist swap AFTER their newest proofs, plus the two
-            # r21-optimized lines (one-pass repeat filter; shared bigram
-            # pass), join the stale head; six tail fill names
-            # (streaming_cdc_latest, streaming_dedup,
-            # streaming_dedup_watermark, streaming_foreachbatch_topk,
-            # streaming_late_window, stedi_flagship) displace to the next
-            # fill.
-            "dedup_agreement_report",
-            "dedup_containment",
-            "dedup_jaccard_prefix",
-            "dedup_keep_containment",
-            "lm_perplexity_filter",
-            "substring_dup_spans",
-            # (a) the r19 stale set: staging restage + new/upgraded queries
-            "approx_distinct",
-            "column_profile_approx",
-            "column_profile_approx_bounds",
-            "curation_admission_e2e",
-            "dedup_containment_incremental",
-            "dedup_incremental_indexed",
-            "ingest_admission",
-            "ingest_admission_day2",
-            "ingest_index_compaction",
-            "ingest_index_merge",
-            "quality_fit_drift",
-            "sim_centroid_drift",
-            "sim_incremental_range",
-            "sim_incremental_topk",
-            "sim_index_merge",
-            "sim_index_rebuild",
-            "sim_rebuild_recall",
-            "sim_topk_day2",
-            "streaming_dedup_containment",
-            "streaming_dedup_incremental",
-            "streaming_ingest_admission",
-            "streaming_ingest_admission_day2",
-            "streaming_quality_drift",
-            "streaming_sim_topk",
-            "streaming_sim_topk_day2",
-            # (b) oldest-proof fill: serialize_json (upgraded) + r13 head
-            "serialize_json",
-            "dedup_passages",
-            "filtered_revenue",
-            "funnel_stages",
-            "hll_registers",
-            "length_drift_report",
-            "multimodal_png_stats",
-            "ngram_decontaminate",
-            "orderby_limit",
-            "pii_redact_v2",
-            "pivot_events",
-            "pricing_summary",
-            "quality_logit_score",
-            "recursive_cte_closure",
-            "regex_pretokenize",
-            "retrieval_rrf_fusion",
-            "scd2_intervals",
-            "sessionize",
-            "sql_script_histogram",
-            # (stedi_flagship, streaming_cdc_latest, streaming_dedup,
-            # streaming_dedup_watermark, streaming_foreachbatch_topk,
-            # streaming_late_window displaced to the r21 fill by the six
-            # stale entries above; streaming_outer_join displaced to the
-            # r20 fill by the late-round sim_rebuild_recall addition, per
-            # the rule: additions displace from the fill TAIL, never the
-            # stale head)
-        )
-        if n in merged  # ordering hint only — a renamed query must not break registry()
-    ]
-    rest = [n for n in merged if n not in front]
-    ordered = front + rest
-    return {n: merged[n] for n in ordered}
+    return merged

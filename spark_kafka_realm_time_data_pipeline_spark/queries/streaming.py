@@ -642,6 +642,14 @@ def _scratch_dir(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix)
 
 
+def _checkpoint_in(out_dir: str) -> str:
+    """The foreachBatch twins' stream checkpoint, kept inside their scratch
+    dir so the ``finally`` that removes the dir removes it too.  Spark's
+    file listing skips ``_``-prefixed entries, so reading ``out_dir`` back
+    as parquet never sees it."""
+    return os.path.join(out_dir, "_checkpoint")
+
+
 _INTERVAL_S = 1800  # attribution lookback: click within 30 min before purchase
 
 
@@ -844,6 +852,9 @@ def q_streaming_foreachbatch_topk(spark: SparkSession, sf_dir: str) -> DataFrame
         F.count(F.lit(1)).alias("n_events")
     )
     out_dir = _scratch_dir("feb_topk_")
+    # complete mode overwrites the result each batch; keep it in a subdir
+    # so the overwrite leaves the checkpoint beside it alone
+    topk_dir = os.path.join(out_dir, "topk")
 
     def write_topk(batch_df: DataFrame, batch_id: int) -> None:
         rank_w = W.partitionBy("w").orderBy(F.desc("n_events"), "event_type")
@@ -852,20 +863,23 @@ def q_streaming_foreachbatch_topk(spark: SparkSession, sf_dir: str) -> DataFrame
             .filter(F.col("rn") == 1)
             .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
             .write.mode("overwrite")
-            .parquet(out_dir)
+            .parquet(topk_dir)
         )
 
     # one try/finally owns the temp dir for the WHOLE run+read, so a stream
     # error or awaitTermination timeout can't leak it
     try:
-        query = foreach_batch_sink(agg, write_topk, output_mode="complete")
+        query = foreach_batch_sink(
+            agg, write_topk, output_mode="complete",
+            checkpoint_dir=_checkpoint_in(out_dir),
+        )
         try:
             if not query.awaitTermination(300):
                 raise TimeoutError("foreachBatch top-k replay did not finish in 300s")
             input_rows, proc_secs = _progress_totals(query)
         finally:
             query.stop()
-        out = spark.read.parquet(out_dir).localCheckpoint(eager=True)
+        out = spark.read.parquet(topk_dir).localCheckpoint(eager=True)
         out.stream_input_rows = input_rows
         if proc_secs > 0:
             out.stream_processing_secs = proc_secs
@@ -1123,7 +1137,10 @@ def q_streaming_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
         matches.repartition(1).write.mode("append").parquet(out_dir)
 
     try:
-        query = foreach_batch_sink(delta, match_batch, output_mode="append")
+        query = foreach_batch_sink(
+            delta, match_batch, output_mode="append",
+            checkpoint_dir=_checkpoint_in(out_dir),
+        )
         try:
             if not query.awaitTermination(300):
                 raise TimeoutError(
@@ -1193,7 +1210,10 @@ def q_streaming_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame
         matches.repartition(1).write.mode("append").parquet(out_dir)
 
     try:
-        query = foreach_batch_sink(delta, match_batch, output_mode="append")
+        query = foreach_batch_sink(
+            delta, match_batch, output_mode="append",
+            checkpoint_dir=_checkpoint_in(out_dir),
+        )
         try:
             if not query.awaitTermination(300):
                 raise TimeoutError(
@@ -1257,7 +1277,10 @@ def q_streaming_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         matches.repartition(1).write.mode("append").parquet(out_dir)
 
     try:
-        query = foreach_batch_sink(delta, match_batch, output_mode="append")
+        query = foreach_batch_sink(
+            delta, match_batch, output_mode="append",
+            checkpoint_dir=_checkpoint_in(out_dir),
+        )
         try:
             if not query.awaitTermination(300):
                 raise TimeoutError(
@@ -1318,7 +1341,10 @@ def q_streaming_sim_topk_day2(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).repartition(1).write.mode("append").parquet(out_dir)
 
     try:
-        query = foreach_batch_sink(delta2, match_batch, output_mode="append")
+        query = foreach_batch_sink(
+            delta2, match_batch, output_mode="append",
+            checkpoint_dir=_checkpoint_in(out_dir),
+        )
         try:
             if not query.awaitTermination(300):
                 raise TimeoutError(
@@ -1389,7 +1415,10 @@ def q_streaming_ingest_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         decisions.repartition(1).write.mode("append").parquet(out_dir)
 
     try:
-        query = foreach_batch_sink(delta, admit_batch, output_mode="append")
+        query = foreach_batch_sink(
+            delta, admit_batch, output_mode="append",
+            checkpoint_dir=_checkpoint_in(out_dir),
+        )
         try:
             if not query.awaitTermination(300):
                 raise TimeoutError(
@@ -1457,7 +1486,10 @@ def q_streaming_ingest_admission_day2(
         decisions.repartition(1).write.mode("append").parquet(out_dir)
 
     try:
-        query = foreach_batch_sink(delta2, admit_batch, output_mode="append")
+        query = foreach_batch_sink(
+            delta2, admit_batch, output_mode="append",
+            checkpoint_dir=_checkpoint_in(out_dir),
+        )
         try:
             if not query.awaitTermination(300):
                 raise TimeoutError(
@@ -1523,7 +1555,10 @@ def q_streaming_quality_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).parquet(out_dir)
 
     try:
-        query = foreach_batch_sink(fresh, drift_batch, output_mode="append")
+        query = foreach_batch_sink(
+            fresh, drift_batch, output_mode="append",
+            checkpoint_dir=_checkpoint_in(out_dir),
+        )
         try:
             if not query.awaitTermination(300):
                 raise TimeoutError(
@@ -1743,7 +1778,10 @@ def q_streaming_mv_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         partial.write.mode("append").parquet(out_dir)
 
     try:
-        query = foreach_batch_sink(orders, fold_batch, output_mode="append")
+        query = foreach_batch_sink(
+            orders, fold_batch, output_mode="append",
+            checkpoint_dir=_checkpoint_in(out_dir),
+        )
         try:
             if not query.awaitTermination(300):
                 raise TimeoutError("MV-maintenance stream did not finish in 300s")
@@ -1995,7 +2033,10 @@ def q_streaming_ppl_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         kept.write.mode("append").parquet(out_dir)
 
     try:
-        query = foreach_batch_sink(docs, score_batch, output_mode="append")
+        query = foreach_batch_sink(
+            docs, score_batch, output_mode="append",
+            checkpoint_dir=_checkpoint_in(out_dir),
+        )
         try:
             if not query.awaitTermination(300):
                 raise TimeoutError("ppl-gate stream replay did not finish in 300s")

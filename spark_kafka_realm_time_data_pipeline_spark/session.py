@@ -23,7 +23,9 @@ import zipfile
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# local[N] size when the caller names none: the cores this process may run
+# on, unless SPARK_GRAFT_CPUS overrides it (bench.py scaling runs set it).
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 # Runtime-settable confs the engine needs on ANY session, including one the
 # test driver built itself (configure_runtime applies them post-hoc).

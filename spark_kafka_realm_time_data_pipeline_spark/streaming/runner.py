@@ -45,9 +45,8 @@ STREAM_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "4")
 # 5.5s -> 4.1s on the sf0.1 flagship join, combined with 8 -> 4 state
 # partitions).  Production paths (sinks.py, processing-time triggers) never
 # pass through here and keep the RocksDB session default.
-REPLAY_STATE_PROVIDER = os.environ.get(
-    "SPARK_GRAFT_REPLAY_STATE_PROVIDER",
-    "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
+REPLAY_STATE_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
 )
 
 # Checkpoint root for BOUNDED replays.  A replay's checkpoint is deleted the

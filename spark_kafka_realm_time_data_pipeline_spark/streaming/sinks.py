@@ -81,14 +81,21 @@ def foreach_batch_sink(
     fn: Callable[[DataFrame, int], None],
     output_mode: str = "append",
     available_now: bool = True,
+    checkpoint_dir: str | None = None,
 ) -> StreamingQuery:
     """Arbitrary batch sink: fn(batch_df, batch_id) per micro-batch — how
     the engine writes streams to parquet/Delta/JDBC targets the streaming
-    API lacks native sinks for."""
+    API lacks native sinks for.
+
+    ``checkpoint_dir`` is the caller's to remove; without one the sink
+    checkpoints into a fresh temp dir that is never removed."""
     writer = (
         df.writeStream.foreachBatch(fn)
         .outputMode(output_mode)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="feb_ckpt_"))
+        .option(
+            "checkpointLocation",
+            checkpoint_dir or tempfile.mkdtemp(prefix="feb_ckpt_"),
+        )
     )
     if available_now:
         writer = writer.trigger(availableNow=True)

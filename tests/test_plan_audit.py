@@ -1,167 +1,38 @@
-"""Pins for the exhaustive plan audit (tools/plan_audit.py -> PLAN_AUDIT.json).
+"""Live smoke tests for the plan audit (tools/plan_audit.py).
 
-The audit greps every batch registry query's physical plan for the shapes
-that do not survive 100 TB; these tests pin its flagged sets against the
-reviewed allowlists, so re-running the tool after a change that introduces
-a NEW cartesian product / row-UDF / nested-loop join fails CI while
-benign count drift (exchanges, scans) does not.
+tests/test_oracle_parity.py runs the audit over the whole registry and
+holds its flags to the reviewed allowlists; these pin the audit itself: it
+must flag a known nested-loop join, flag nothing on a clean aggregate, and
+capture the stage plans behind a localCheckpoint barrier.
 """
 
-import json
 import os
+import sys
 
 from spark_kafka_realm_time_data_pipeline_spark.queries import registry
-from spark_kafka_realm_time_data_pipeline_spark.session import get_spark
 
 from conftest import SF_DIR
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 
-# The one row-at-a-time Python UDF in the suite: the documented
-# inventory-parity entry (queries/udfs.py), never a hot path.
-ALLOWED_BATCH_EVAL = {"python_udf_scalar"}
-
-# Every BroadcastNestedLoopJoin below is against a k-row or 1-row frame
-# that is bounded by CONSTRUCTION, not by statistics: scalar-subquery
-# results (tpch_q11/q22), broadcast totals (bm25/tfidf/length_drift/
-# fk_integrity), k centroids or query vectors (kmeans/sim_*), a 1-row
-# bloom bitmap (bloom_prune_join).  A new name appearing here means a new
-# non-equi join whose build side must be proven bounded first.
-ALLOWED_BNLJ = {
-    "bloom_prune_join",
-    "bm25_term_scores",
-    "fk_integrity_audit",
-    "kmeans_embeddings",
-    "length_drift_report",
-    # surfaced by the r18 barrier-STAGE capture: the checkpointed
-    # `matched` frame crossJoins broadcast(n_docs) — a 1-row global-count
-    # scalar (operators/text.py:retrieval_rrf_fusion), same class as the
-    # bm25/tfidf totals
-    "retrieval_rrf_fusion",
-    "sim_bruteforce_topk",
-    # r19 acceptance gate: brute_force_topk's broadcast of the BOUNDED
-    # day-2 acceptance batch (110 queries) against the merged corpus —
-    # the declared oracle tier, same class as sim_bruteforce_topk
-    "sim_rebuild_recall",
-    "sim_incremental_range",  # delta x broadcast(centroids): n_clusters rows
-    "sim_incremental_topk",  # delta x broadcast(centroids): n_clusters rows
-    "sim_index_merge",  # gate probe + assignment: both broadcast(centroids)
-    "sim_topk_day2",  # merged-index probe: delta x broadcast(centroids)
-    # surfaced by the r19 STREAMING plan capture: the foreachBatch twins
-    # of the two allowlisted batch probes above — identical per-trigger
-    # delta x broadcast(centroids) shape, n_lists rows on the build side
-    "streaming_sim_topk",
-    "streaming_sim_topk_day2",
-    "sim_ivf_topk",
-    "sim_recall_report",
-    "tfidf_top_terms",
-    "tpch_q11_important_stock",
-    "tpch_q22_global_sales",
-}
-
-
-def _artifact():
-    with open(os.path.join(ROOT, "PLAN_AUDIT.json")) as fh:
-        return json.load(fh)
-
-
-def test_audit_artifact_covers_the_whole_registry():
-    """r19 (VERDICT r18 item 4): the streaming family is no longer exempt —
-    every registry query must carry an audit row; the skipped list must
-    stay EMPTY (any future entry needs a per-name justification in
-    tools/plan_audit.py's EXECUTING_SKIP)."""
-    out = _artifact()
-    reg = registry()
-    audited = set(out["queries"])
-    assert not out["errors"], sorted(out["errors"])
-    missing = set(reg) - audited
-    assert not missing, f"re-run tools/plan_audit.py: unaudited {sorted(missing)}"
-    assert out.get("skipped", []) == [], out["skipped"]
-
-
-def test_audit_artifact_matches_current_source():
-    """A plan regression edited into an EXISTING query must not ride a
-    stale artifact through CI: the artifact records a fingerprint of every
-    package .py at audit time, and this asserts it equals the working
-    tree's — any source change requires re-running tools/plan_audit.py."""
-    import sys
-
-    sys.path.insert(0, os.path.join(ROOT, "tools"))
-    from plan_audit import source_hash
-
-    out = _artifact()
-    assert "source_hash" in out, "re-run tools/plan_audit.py (no source_hash)"
-    assert out["source_hash"] == source_hash(ROOT), (
-        "package source changed since the committed audit — re-run "
-        "tools/plan_audit.py"
-    )
-
-
-def test_no_unreviewed_antipattern_flags():
-    out = _artifact()
-    flagged = out["flagged"]
-    assert flagged["CartesianProduct"] == [], flagged["CartesianProduct"]
-    assert set(flagged["BatchEvalPython"]) <= ALLOWED_BATCH_EVAL, flagged[
-        "BatchEvalPython"
-    ]
-    assert set(flagged["BroadcastNestedLoopJoin"]) <= ALLOWED_BNLJ, flagged[
-        "BroadcastNestedLoopJoin"
-    ]
+from plan_audit import audit_one  # noqa: E402
 
 
 def test_audit_one_live_smoke(spark):
-    """Exercise the audit code path itself on one flagged and one clean
-    query so the artifact cannot drift from what the tool would measure."""
-    import sys
-
-    sys.path.insert(0, os.path.join(ROOT, "tools"))
-    from plan_audit import audit_one
-
     reg = registry()
-    clean = audit_one(spark, "pricing_summary", reg["pricing_summary"].fn, SF_DIR)
+    clean, _ = audit_one(spark, "pricing_summary", reg["pricing_summary"].fn, SF_DIR)
     assert clean["flags"] == [], clean
-    flagged = audit_one(
+    flagged, _ = audit_one(
         spark, "tpch_q22_global_sales", reg["tpch_q22_global_sales"].fn, SF_DIR
     )
     assert flagged["flags"] == ["BroadcastNestedLoopJoin"], flagged
 
 
-# The five barrier-final queries whose real joins/shuffles run in
-# pre-localCheckpoint stage jobs — the r17 audit blind spot (VERDICT r17
-# item 4).  Stage capture must keep them visible to the sweep.
-BARRIER_FINAL = {
-    "ingest_index_merge",
-    "dedup_incremental",
-    "dedup_containment",
-    "dedup_incremental_indexed",
-    "dedup_jaccard_prefix",
-}
-
-
-def test_barrier_queries_have_stage_counts():
-    """r18: the committed artifact must carry non-empty stage_counts for
-    every barrier-final query — an all-zero row means the monkeypatched
-    localCheckpoint capture regressed (e.g. the classic-DataFrame patch
-    point moved again) and staged pipelines are invisible to the
-    anti-pattern sweep."""
-    out = _artifact()
-    for name in sorted(BARRIER_FINAL):
-        row = out["queries"][name]
-        stage = row.get("stage_counts", {})
-        assert row.get("n_stage_plans", 0) > 0, (name, row)
-        assert sum(stage.values()) > 0, (name, stage)
-
-
 def test_stage_capture_live(spark):
-    """Live twin of the artifact gate: audit_one on a barrier-final query
-    captures >=1 stage plan with real scan/exchange counts."""
-    import sys
-
-    sys.path.insert(0, os.path.join(ROOT, "tools"))
-    from plan_audit import audit_one
-
+    """audit_one on a barrier-final query captures >=1 stage plan with real
+    scan/exchange counts."""
     reg = registry()
-    row = audit_one(
+    row, _ = audit_one(
         spark, "dedup_containment", reg["dedup_containment"].fn, SF_DIR
     )
     assert row.get("n_stage_plans", 0) >= 1, row

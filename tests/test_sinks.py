@@ -3,6 +3,8 @@ console and foreachBatch paths execute for real; the Kafka builders are
 validated structurally (they construct without a broker — failure happens
 only at connect time, which is the production path)."""
 
+import tempfile
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -22,12 +24,14 @@ def _events_rows(spark) -> int:
     return spark.read.parquet(f"{SF_DIR}/events.parquet").count()
 
 
-def test_console_sink_runs(spark):
+def test_console_sink_runs(spark, tmp_path, monkeypatch):
     """K2: the reference's console sink (sparkpyrediskafkastreamtoconsole.py:154)
     over a bounded replay — must process all rows and terminate.  (The
     printed table goes to the JVM's stdout, echoed asynchronously — assert
     on query progress, which is the sink's own accounting.)"""
     ev = stream_table(spark, SF_DIR, "events").select("event_id", "event_type")
+    # the sink checkpoints into a fresh temp dir; keep it under tmp_path
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     q = console_sink(ev, num_rows=5)
     q.awaitTermination(120)
     progress = list(q.recentProgress)
@@ -37,7 +41,7 @@ def test_console_sink_runs(spark):
     assert sum(p["numInputRows"] for p in progress) == _events_rows(spark)
 
 
-def test_foreach_batch_sink_collects(spark):
+def test_foreach_batch_sink_collects(spark, tmp_path):
     """foreachBatch: arbitrary batch sink — counts per micro-batch land in
     the driver-side accumulator list."""
     seen = []
@@ -46,10 +50,21 @@ def test_foreach_batch_sink_collects(spark):
     def collect(batch_df, batch_id):
         seen.append((batch_id, batch_df.count()))
 
-    q = foreach_batch_sink(ev, collect)
+    q = foreach_batch_sink(ev, collect, checkpoint_dir=str(tmp_path / "ckpt"))
     q.awaitTermination(120)
     q.stop()
     assert sum(n for _b, n in seen) == _events_rows(spark)
+
+
+def test_foreachbatch_twin_leaves_no_temp_dir(spark, tmp_path, monkeypatch):
+    """A foreachBatch registry twin removes everything it puts under the
+    temp dir, its stream checkpoint included."""
+    from spark_kafka_realm_time_data_pipeline_spark.queries import registry
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    out = registry()["streaming_foreachbatch_topk"].fn(spark, SF_DIR)
+    assert out.count() > 0
+    assert sorted(p.name for p in tmp_path.iterdir()) == []
 
 
 def test_kafka_builders_construct():

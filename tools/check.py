@@ -1,8 +1,10 @@
-"""Local mirror of the driver's correctness gate.
+"""Registry-wide correctness gate against the DuckDB oracle.
 
 Runs every __spark_entry__.queries() entry at the given SF and compares to
 oracle_sql() via DuckDB: row count, column names, and an order-insensitive
 value hash (columns sorted by name, rows sorted, values stringified).
+tests/test_oracle_parity.py runs the same ``check_one`` over the whole
+registry at sf0.001.
 
 Usage: python tools/check.py [sf_dir] [query ...]
 """
@@ -103,17 +105,10 @@ def type_parity_problems(rows, cols, ora_rows, ora_cols):
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark(cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    spark = get_spark()
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = oracle_con(sf_dir)
 
     unknown = only - set(qs)
     if unknown:
@@ -126,47 +121,64 @@ def main():
             continue
         t0 = time.time()
         try:
-            df = fn(spark, sf_dir)
-            cols = df.columns
-            rows = [tuple(r) for r in df.collect()]
+            problems = check_one(fn(spark, sf_dir), con, oracles.get(name))
         except Exception:
-            print(f"FAIL  {name}: spark ERROR")
+            print(f"FAIL  {name}: ERROR")
             traceback.print_exc()
             n_fail += 1
             continue
         dt = time.time() - t0
-        if name not in oracles:
-            print(f"rows  {name}: {len(rows)} rows ({dt:.1f}s) [rows-only]")
-            n_rows_only += 1
-            continue
-        try:
-            rel = con.sql(oracles[name])
-            ora_cols = list(rel.columns)
-            decl_types = [str(t).upper() for t in rel.types]
-            ora_rows = rel.fetchall()
-        except Exception as e:
-            print(f"FAIL  {name}: oracle ERROR {e}")
-            n_fail += 1
-            continue
-        problems = list(declared_type_problems(ora_cols, decl_types))
-        if len(rows) != len(ora_rows):
-            problems.append(f"rowcount {len(rows)} vs {len(ora_rows)}")
-        if sorted(cols) != sorted(ora_cols):
-            problems.append(f"schema {sorted(cols)} vs {sorted(ora_cols)}")
-        if not problems:
-            problems.extend(type_parity_problems(rows, cols, ora_rows, ora_cols))
-        if not problems:
-            hs, ho = value_hash(rows, cols), value_hash(ora_rows, ora_cols)
-            if hs != ho:
-                problems.append(f"hash {hs} vs {ho}")
         if problems:
             print(f"FAIL  {name}: {'; '.join(problems)} ({dt:.1f}s)")
             n_fail += 1
+        elif name not in oracles:
+            print(f"rows  {name} ({dt:.1f}s) [rows-only]")
+            n_rows_only += 1
         else:
-            print(f"pass  {name} ({len(rows)} rows, {dt:.1f}s)")
+            print(f"pass  {name} ({dt:.1f}s)")
             n_pass += 1
     print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only")
     return 1 if n_fail else 0
+
+
+def oracle_con(sf_dir: str):
+    """A DuckDB connection with one view per corpus table of ``sf_dir``."""
+    con = duckdb.connect()
+    for t in (
+        "region nation customer supplier part orders lineitem events documents embeddings"
+    ).split():
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
+def check_one(df, con, oracle: str | None) -> list[str]:
+    """Collect a built query frame and compare it to its DuckDB oracle:
+    declared oracle types, row count, column names, per-column value types,
+    then the value hash.  Returns the problems found (empty = pass).  With
+    no oracle the check is rows-only: the query must return a row.  Spark
+    and oracle errors propagate to the caller."""
+    cols = df.columns
+    rows = [tuple(r) for r in df.collect()]
+    if oracle is None:
+        return [] if rows else ["rows-only: 0 rows"]
+    rel = con.sql(oracle)
+    ora_cols = list(rel.columns)
+    decl_types = [str(t).upper() for t in rel.types]
+    ora_rows = rel.fetchall()
+    problems = list(declared_type_problems(ora_cols, decl_types))
+    if len(rows) != len(ora_rows):
+        problems.append(f"rowcount {len(rows)} vs {len(ora_rows)}")
+    if sorted(cols) != sorted(ora_cols):
+        problems.append(f"schema {sorted(cols)} vs {sorted(ora_cols)}")
+    if not problems:
+        problems.extend(type_parity_problems(rows, cols, ora_rows, ora_cols))
+    if not problems:
+        hs, ho = value_hash(rows, cols), value_hash(ora_rows, ora_cols)
+        if hs != ho:
+            problems.append(f"hash {hs} vs {ho}")
+    return problems
 
 
 if __name__ == "__main__":

@@ -5,8 +5,8 @@ Writes <out_dir>/<query>_<suffix>.txt for each query.
 
 Streaming queries (whose registry fn EXECUTES the stream and returns a
 memory/parquet read-back) are dumped as the plan of the returned frame,
-prefixed with a note — their per-trigger plans live in PLAN_AUDIT.json's
-micro-batch capture instead.
+prefixed with a note — tools/plan_audit.py captures their per-trigger
+plans instead.
 """
 
 from __future__ import annotations
@@ -39,7 +39,7 @@ def main() -> None:
                 fh.write(
                     "-- NOTE: streaming registry fns execute the stream and "
                     "return the sink read-back;\n-- this is the returned "
-                    "frame's plan, per-trigger plans are in PLAN_AUDIT.json\n"
+                    "frame's plan; tools/plan_audit.py captures per-trigger plans\n"
                 )
             fh.write(plan)
         print(f"wrote {path}")
