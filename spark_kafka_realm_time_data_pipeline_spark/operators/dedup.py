@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..sources.files import load_table
+from ..sources.files import load_table, read_parquet
 
 # 6 bands x 8 rows: LSH candidate threshold ~ (1/b)^(1/r) = 0.80, tuned to
 # the 0.8 Jaccard verify bar. Round-1 ran 4 bands x 2 rows, which admits
@@ -227,6 +227,11 @@ MINHASH_PRIME = 268435399
 MINHASH_PRIME_B = 268435367
 
 
+def _affine_sql(a: str, b: str, s: int) -> str:
+    """Hash ``s`` of the Carter-Wegman family as SQL: (a + s*(2b+1)) % P."""
+    return f"({a} + {s} * (({b}) * 2 + 1)) % {MINHASH_PRIME}"
+
+
 def minhash_signatures(
     toks: DataFrame,
     n_hashes: int = N_MINHASH,
@@ -253,26 +258,24 @@ def minhash_signatures(
     to be a second full groupBy(doc_id) scan over the widest frame in the
     suite; piggybacking it here deletes that scan + shuffle outright.
     """
-    seeds = list(range(n_hashes))
     if tok_hashed:
         # dual-prime residues; both < 2^28 so the affine combination below
         # stays within signed 64-bit range
-        hashed = toks.select(
-            "doc_id",
-            (F.col("tok") % MINHASH_PRIME).alias("a"),
-            (F.col("tok") % MINHASH_PRIME_B).alias("b"),
+        hashed = toks.selectExpr(
+            "doc_id", f"tok % {MINHASH_PRIME} AS a", f"tok % {MINHASH_PRIME_B} AS b"
         )
     else:
-        hashed = toks.select(
+        hashed = toks.selectExpr(
             "doc_id",
-            F.conv(F.substring(F.md5("tok"), 1, 7), 16, 10).cast("long").alias("a"),
-            F.conv(F.substring(F.md5("tok"), 9, 7), 16, 10).cast("long").alias("b"),
+            "CAST(conv(substring(md5(tok), 1, 7), 16, 10) AS BIGINT) AS a",
+            "CAST(conv(substring(md5(tok), 9, 7), 16, 10) AS BIGINT) AS b",
         )
-    sig = lambda s: (F.col("a") + F.lit(s) * (F.col("b") * 2 + 1)) % MINHASH_PRIME
-    aggs = [F.min(sig(s)).alias(f"s{s}") for s in seeds]
+    aggs = [
+        f"min({_affine_sql('a', 'b', s)}) AS s{s}" for s in range(n_hashes)
+    ]
     if with_size:
-        aggs.append(F.count("*").alias("n_toks"))
-    return hashed.groupBy("doc_id").agg(*aggs)
+        aggs.append("count(1) AS n_toks")
+    return hashed.groupBy("doc_id").agg(*map(F.expr, aggs))
 
 
 def signatures_from_arrays(
@@ -293,21 +296,20 @@ def signatures_from_arrays(
     the widest delta-side exchange in the near-dup probe).  An
     ``array_min`` over a ``transform`` computes the same minimum inside
     the scan stage — guide §2.4 "remove shuffles outright".  ``n_toks``
-    is ``size(arr)`` (the arrays are distinct by construction)."""
-    sig = lambda s: F.array_min(  # noqa: E731
-        F.transform(
-            "arr",
-            lambda t: (
-                t % MINHASH_PRIME
-                + F.lit(s) * ((t % MINHASH_PRIME_B) * 2 + 1)
-            )
-            % MINHASH_PRIME,
-        )
-    )
-    cols = [F.col("doc_id")] + [sig(s).alias(f"s{s}") for s in range(n_hashes)]
+    is ``size(arr)`` (the arrays are distinct by construction).
+
+    The expressions are SQL text, not per-seed ``Column`` lambdas: the
+    JVM analyses either form in ~0.03 s, but building 48 lambda columns
+    over py4j cost 0.25-0.30 s of driver time per call, paid once per
+    ingest batch."""
+    residues = f"t % {MINHASH_PRIME}", f"t % {MINHASH_PRIME_B}"
+    cols = ["doc_id"] + [
+        f"array_min(transform(arr, t -> {_affine_sql(*residues, s)})) AS s{s}"
+        for s in range(n_hashes)
+    ]
     if with_size:
-        cols.append(F.size("arr").cast("long").alias("n_toks"))
-    return darr.select(*cols)
+        cols.append("CAST(size(arr) AS BIGINT) AS n_toks")
+    return darr.selectExpr(*cols)
 
 
 def signature_bands(
@@ -325,24 +327,22 @@ def signature_bands(
     instead of the ~50-byte '|'-concat string of round 4.  acc < P (2^42),
     *B (2^20) + s (< 2^28) stays under 2^63 in both engines.  A fold
     collision merely merges two buckets, whose contents the exact-Jaccard
-    verify still filters — and the oracle replays the same fold."""
+    verify still filters — and the oracle replays the same fold.  Built as
+    SQL text for the same driver-time reason as signatures_from_arrays."""
     n_bands = n_hashes // band_rows
 
-    def band_key(b: int):
-        acc = F.lit(0).cast("long")
+    def band_key(b: int) -> str:
+        acc = "CAST(0 AS BIGINT)"
         for r in range(band_rows):
-            acc = (acc * SHINGLE_B + F.col(f"s{b * band_rows + r}")) % SHINGLE_P
+            acc = f"({acc} * {SHINGLE_B} + s{b * band_rows + r}) % {SHINGLE_P}"
         return acc
 
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band_id"),
-            band_key(b).alias("band_key"),
-        )
+    band_structs = ", ".join(
+        f"named_struct('band_id', {b}, 'band_key', {band_key(b)})"
         for b in range(n_bands)
-    ]
-    return sigs.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("bd")
+    )
+    return sigs.selectExpr(
+        "doc_id", f"explode(array({band_structs})) AS bd"
     ).select("doc_id", "bd.band_id", "bd.band_key")
 
 
@@ -836,11 +836,11 @@ def incremental_near_dup_indexed(
     same exact-Jaccard formula — so the two share one oracle."""
     from pyspark import StorageLevel
 
-    base_bands = spark.read.parquet(f"{index_path}/bands").select(
+    base_bands = read_parquet(spark, f"{index_path}/bands").select(
         F.col("doc_id").alias("base_id"), "band_id", "band_key"
     )
-    base_toks = spark.read.parquet(f"{index_path}/toks")
-    base_sizes = spark.read.parquet(f"{index_path}/sizes")
+    base_toks = read_parquet(spark, f"{index_path}/toks")
+    base_sizes = read_parquet(spark, f"{index_path}/sizes")
 
     d = delta.select("doc_id", "text")
     target = d.sparkSession.sparkContext.defaultParallelism
@@ -909,34 +909,45 @@ def incremental_near_dup_batch(
     8-byte keys); a batch too large to broadcast belongs on the shuffling
     indexed path instead.
 
-    Durability: the ``localCheckpoint(eager=True)`` barriers here hold
-    delta-sized frames unreplicated on executors — executor loss
+    Durability: the ``localCheckpoint(eager=True)`` barrier here holds a
+    delta-sized frame unreplicated on executors — executor loss
     mid-batch fails (and retries) the batch rather than recomputing;
     switch to reliable ``checkpoint()`` if batch retries are
     unacceptable (see operators/ingest's module docstring)."""
-    base_bands = spark.read.parquet(f"{index_path}/bands").select(
-        F.col("doc_id").alias("base_id"), "band_id", "band_key"
+    return _near_dup_probe(
+        spark, index_path, delta_shingle_arrays(delta), threshold, max_bucket
     )
-    base_arrs = spark.read.parquet(f"{index_path}/toks_arr")
 
-    # A micro-batch frame arrives with SOURCE-split parallelism (often a
-    # handful of file splits); fan the compact (doc_id, text) rows out to
-    # the session's width BEFORE the shingle explode — and hash by doc_id,
-    # so the signature groupBy(doc_id) is satisfied by the incoming
-    # partitioning and needs NO exchange of the exploded token frame.
+
+def delta_shingle_arrays(delta: DataFrame) -> DataFrame:
+    """The delta's (doc_id, arr) shingle-set arrays, pinned: the one
+    materialized intermediate of the per-micro-batch probes.
+
+    A micro-batch frame arrives with SOURCE-split parallelism (often a
+    handful of file splits), so the compact (doc_id, text) rows fan out to
+    the session's width before the tokenize.  Each probe reads the arrays
+    twice (the signature or ranked chain, and the verify broadcast), and
+    the ingest funnel hands one pinned frame to both probes.  The eager
+    ``localCheckpoint`` is measured, not decorative: with a lazily shared
+    repartition exchange instead, every consumer re-ran the tokenize
+    subtree and the funnel family measured ~2x slower."""
     target = delta.sparkSession.sparkContext.defaultParallelism
     d = delta.select("doc_id", "text").repartition(target, "doc_id")
-    # The delta's per-doc shingle-set arrays are the ONE materialized
-    # intermediate (n_delta narrow rows, eager localCheckpoint — no
-    # persist lifecycle to manage across the lazy return): the signature
-    # chain re-explodes it, the verify join broadcasts it.  This barrier
-    # deliberately SURVIVED the r20 funnel-barrier shrink: replacing it
-    # with a lazily shared repartition exchange re-optimized/re-ran the
-    # tokenize subtree per consumer and the funnel family measured ~2x
-    # slower (the duplicated-subtree plan-bloat failure PLANS.md records
-    # for containment_pairs) — multi-consumer tokenize output needs a
-    # real materialization point.
-    darr = doc_shingle_arrays(d).localCheckpoint(eager=True)
+    return doc_shingle_arrays(d).localCheckpoint(eager=True)
+
+
+def _near_dup_probe(
+    spark: SparkSession,
+    index_path: str,
+    darr: DataFrame,
+    threshold: float = 0.8,
+    max_bucket: int = MAX_BUCKET,
+) -> DataFrame:
+    """incremental_near_dup_batch on the delta's shingle arrays."""
+    base_bands = read_parquet(spark, f"{index_path}/bands").select(
+        F.col("doc_id").alias("base_id"), "band_id", "band_key"
+    )
+    base_arrs = read_parquet(spark, f"{index_path}/toks_arr")
     # array-native signatures: no explode/groupBy exchange per batch
     dsigs = signatures_from_arrays(darr, with_size=True)
     delta_bands = capped_buckets(signature_bands(dsigs), max_bucket).select(
@@ -1064,27 +1075,39 @@ def containment_vs_base_batch(
     Value-identical to running the same pipeline in one batch, so the
     availableNow streaming twin shares the batch oracle verbatim.
 
-    Durability: the ``localCheckpoint(eager=True)`` plan-stability
-    barriers on the delta-sized frames store blocks UNREPLICATED on
-    executors — on a real cluster an executor loss mid-batch fails the
-    batch (retried by the driver; the probe is idempotent against the
-    staged index) rather than recomputing lineage.  A deployment that
+    Durability: the ``localCheckpoint(eager=True)`` barrier on the
+    delta's shingle arrays stores blocks UNREPLICATED on executors — on
+    a real cluster an executor loss mid-batch fails the batch (retried
+    by the driver; the probe is idempotent against the staged index)
+    rather than recomputing lineage.  A deployment that
     cannot tolerate batch retries should use reliable ``checkpoint()``
     on a shared filesystem instead; see operators/ingest's module
     docstring for the full trade."""
+    return _containment_probe(
+        spark,
+        index_path,
+        delta_shingle_arrays(delta),
+        threshold_num,
+        threshold_den,
+        max_posting,
+    )
+
+
+def _containment_probe(
+    spark: SparkSession,
+    index_path: str,
+    darr: DataFrame,
+    threshold_num: int = 9,
+    threshold_den: int = 10,
+    max_posting: int = PREFIX_CAP,
+) -> DataFrame:
+    """containment_vs_base_batch on the delta's shingle arrays."""
     from pyspark.sql import Window
 
-    cdf = spark.read.parquet(f"{index_path}/cdf")
-    cidx = spark.read.parquet(f"{index_path}/cidx")
-    carrs = spark.read.parquet(f"{index_path}/carrs")
+    cdf = read_parquet(spark, f"{index_path}/cdf")
+    cidx = read_parquet(spark, f"{index_path}/cidx")
+    carrs = read_parquet(spark, f"{index_path}/carrs")
 
-    target = delta.sparkSession.sparkContext.defaultParallelism
-    d = delta.select("doc_id", "text").repartition(target, "doc_id")
-    # barrier kept through the r20 funnel-barrier shrink — same measured
-    # rationale as incremental_near_dup_batch's darr: the arrays feed the
-    # ranked chain AND the verify broadcast, and a lazily shared exchange
-    # re-ran the tokenize per consumer (~2x slower funnel family)
-    darr = doc_shingle_arrays(d).localCheckpoint(eager=True)
     dtoks = darr.select("doc_id", F.explode("arr").alias("tok"))
     # df lookup: semi-filter the base df scan by the delta's tokens, then
     # hang the (small) result off the delta frame by broadcast.  No barrier:

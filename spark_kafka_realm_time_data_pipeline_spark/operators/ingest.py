@@ -31,6 +31,15 @@ Everything is hash-exact vs the DuckDB oracle: sha2(256) text hashes,
 the integer containment probe, the replayed MinHash band chain with
 exact-Jaccard verify, and the integer-milli quality logit.
 
+One batch is a handful of small Spark jobs, so fixed per-job and per-plan
+cost, not data volume, sets its latency.  The funnel therefore reads the
+staged indexes with cached schemas (no inference job per read), tokenizes
+the not-exact delta once for both dup probes, runs with AQE off (its
+re-planning bought nothing on delta-sized plans and cost ~11 extra jobs
+per batch) and returns its decisions PINNED: AQE is read when a plan
+executes, so the result is checkpointed inside the AQE-off scope rather
+than handed back lazily to run with the session's AQE.
+
 Durability note (applies to every staged-probe operator's
 ``localCheckpoint(eager=True)`` barriers): localCheckpoint stores the
 checkpointed blocks UNREPLICATED on executors, so on a real cluster an
@@ -47,8 +56,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .dedup import containment_vs_base_batch, incremental_near_dup_batch
+from ..session import scoped_conf
+from ..sources.files import read_parquet
+from .dedup import (
+    _containment_probe,
+    _near_dup_probe,
+    delta_shingle_arrays,
+    signature_bands,
+    signatures_from_arrays,
+)
 from .text import quality_logit_score
+
+# Runtime confs of the funnel's own scope; the session keeps its posture.
+FUNNEL_CONF = {"spark.sql.adaptive.enabled": "false"}
 
 
 def stage_hash_index(base: DataFrame, path: str) -> None:
@@ -107,16 +127,15 @@ def merge_admitted_into_indexes(
     indexes byte-stable for concurrent readers).  All work is
     delta-sized: base tables contribute only parquet-footer row counts
     and one hash-probe scan."""
-    # Pin the admitted-id list once (tiny, one row per admitted doc):
-    # since the r20 funnel-barrier shrink the caller's `decisions` frame is
-    # a REAL funnel plan (not three checkpointed leaves), and this function
-    # consumes `adm` from several independent jobs (hash extension, band/
-    # size/array writes) — without the pin each job would re-run the whole
-    # funnel to rebuild the broadcast.
+    # Pin the admitted-id list once (tiny, one row per admitted doc): this
+    # function consumes `adm` from several independent jobs (hash
+    # extension, band/size/array writes), and `admitted_ids` may be any
+    # lazy frame — without the pin each job would re-run its whole plan to
+    # rebuild the broadcast.
     admitted_ids = admitted_ids.localCheckpoint(eager=True)
     adm = delta.join(F.broadcast(admitted_ids), "doc_id", "left_semi")
     # exact-hash extension: admitted hashes not already in the base index
-    bh = spark.read.parquet(f"{hash_index}/bh")
+    bh = read_parquet(spark, f"{hash_index}/bh")
     dh = adm.select(F.sha2("text", 256).alias("h")).distinct()
     # matched feeds exactly one consumer (the anti-join below), so it needs
     # no barrier (r20 funnel-barrier shrink): within the one write job the
@@ -125,15 +144,7 @@ def merge_admitted_into_indexes(
     matched = bh.join(F.broadcast(dh), "h", "left_semi")
     new_hashes = dh.join(F.broadcast(matched), "h", "left_anti")
     # band/size/array extensions: per-doc rows recomputed from admitted text
-    from .dedup import (
-        doc_shingle_arrays,
-        signature_bands,
-        signatures_from_arrays,
-    )
-
-    target = adm.sparkSession.sparkContext.defaultParallelism
-    a = adm.select("doc_id", "text").repartition(target, "doc_id")
-    darr = doc_shingle_arrays(a).localCheckpoint(eager=True)
+    darr = delta_shingle_arrays(adm)
     # array-native signatures: no explode/groupBy exchange per merge.
     # PINNED (r21): the bands and sizes writes below run CONCURRENTLY in
     # the thread pool — unpinned, each write job recomputed the full
@@ -178,7 +189,7 @@ def merge_admitted_into_indexes(
     from functools import reduce
 
     def counted(path: str, table: str, col: str) -> DataFrame:
-        return spark.read.parquet(path).agg(
+        return read_parquet(spark, path).agg(
             F.count(F.lit(1)).cast("long").alias(col)
         ).select(F.lit(table).alias("index_table"), col)
 
@@ -231,25 +242,33 @@ def ingest_admission_batch(
     the oracle replays the same restrictions).  All four gate results
     ride tiny broadcast frames onto the delta.
 
-    On executor loss mid-batch the localCheckpoint barriers fail the
-    batch instead of recomputing (see the module docstring for the
-    durability trade)."""
-    bh = spark.read.parquet(f"{hash_index}/bh")
+    The frame is returned pinned (``localCheckpoint``, computed under the
+    funnel's AQE-off scope).  On executor loss mid-batch the
+    localCheckpoint barriers fail the batch instead of recomputing (see
+    the module docstring for the durability trade)."""
+    with scoped_conf(spark, **FUNNEL_CONF):
+        return _admission_decisions(
+            spark, containment_index, hash_index, band_index, delta
+        ).localCheckpoint(eager=True)
+
+
+def _admission_decisions(
+    spark: SparkSession,
+    containment_index: str,
+    hash_index: str,
+    band_index: str,
+    delta: DataFrame,
+) -> DataFrame:
+    bh = read_parquet(spark, f"{hash_index}/bh")
     dh = delta.select("doc_id", F.sha2("text", 256).alias("h"))
     # base hash scan probed by the broadcast delta hashes — the delta ids
-    # that already exist verbatim in the corpus.  PINNED (r21, reverting
-    # the r20 barrier removal for this one frame): exact_ids is a
-    # MULTI-JOB consumer — its lineage (the base hash-index scan + probe)
-    # is referenced by the containment probe's darr barrier job (via
-    # not_exact), by the near-dup probe's darr barrier job (via
-    # survivors), and by the final flag join's broadcast build.
-    # ReuseExchange dedupes only within ONE plan; unpinned, the base
-    # index was re-scanned ~3x per batch (driver r20 detail: the funnel
-    # family ran 1.6-2x slower at both core counts), and at 100 TB the
-    # probe is base-index-sized.  One eager checkpoint of the tiny id
-    # frame makes every downstream consumer read a local relation.  The
-    # _e flag still rides the frame from birth so both consumers share
-    # the one pinned subtree.
+    # that already exist verbatim in the corpus.  PINNED: exact_ids has
+    # two consumers in separate jobs (the tokenize barrier via not_exact,
+    # and the final flag join), and ReuseExchange dedupes only within ONE
+    # plan; unpinned, the base hash index was re-scanned per job (the
+    # funnel family ran 1.6-2x slower), and at corpus scale that scan is
+    # base-index-sized.  The _e flag rides the frame from birth so both
+    # consumers share the one pinned subtree.
     exact_ids = (
         bh.join(F.broadcast(dh), "h")
         .select("doc_id")
@@ -258,19 +277,21 @@ def ingest_admission_batch(
         .localCheckpoint(eager=True)
     )
     not_exact = delta.join(F.broadcast(exact_ids), "doc_id", "left_anti")
+    # tokenized ONCE for both dup probes (pinned inside)
+    darr = delta_shingle_arrays(not_exact)
+    # pinned: read by the near-dup probe's input and by the final flag join
     contained_ids = (
-        containment_vs_base_batch(spark, containment_index, not_exact)
+        _containment_probe(spark, containment_index, darr)
         .select(F.col("delta_id").alias("doc_id"))
         .distinct()
         .withColumn("_c", F.lit(True))
         .localCheckpoint(eager=True)
     )
-    survivors = not_exact.join(F.broadcast(contained_ids), "doc_id", "left_anti")
+    survivors = darr.join(F.broadcast(contained_ids), "doc_id", "left_anti")
     # single consumer (the final flag join) -> no barrier: the near-dup
-    # probe runs once inside the final job's broadcast build (r20
-    # funnel-barrier shrink)
+    # probe runs once inside the final job's broadcast build
     near_dup_ids = (
-        incremental_near_dup_batch(spark, band_index, survivors)
+        _near_dup_probe(spark, band_index, survivors)
         .select(F.col("delta_id").alias("doc_id"))
         .distinct()
     )

@@ -17,9 +17,11 @@ start:
 
 from __future__ import annotations
 
+import atexit
 import os
 import tempfile
 import zipfile
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -82,7 +84,41 @@ def _package_zip() -> str:
                 arc = os.path.join(pkg_name, os.path.relpath(fpath, pkg_dir))
                 zf.write(fpath, arc)
     os.replace(tmp, zpath)
+    # the zip is per process (pid in its name): remove it when the process exits
+    atexit.register(_remove_quietly, zpath)
     return zpath
+
+
+def _remove_quietly(path: str) -> None:
+    try:
+        os.remove(path)
+    except OSError:
+        pass
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, **confs: str):
+    """Set runtime SQL confs for the body of a ``with`` block, then put
+    each key back as it was: the previous value if it was set, unset if it
+    was not — also when the body raises.  Pass dotted keys with ``**``:
+    ``scoped_conf(spark, **{"spark.sql.adaptive.enabled": "false"})``.
+
+    Confs are read when a plan EXECUTES, not when it is built, so a frame
+    returned lazily from the block runs under the restored confs; pin it
+    inside the block if it must run under the scoped ones.  The confs are
+    session-wide while the block runs, so queries that other threads run on
+    the same session see them too."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield spark
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def configure_runtime(spark: SparkSession) -> SparkSession:

@@ -66,26 +66,36 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar parquet scan. Catalyst handles column pruning + filter
     pushdown; at 100 TB the same call reads a partitioned table and prunes
     partitions — no code change."""
-    return convert_nano_ts(spark.read.parquet(table_path(sf_dir, name)), name)
+    return convert_nano_ts(read_parquet(spark, table_path(sf_dir, name)), name)
 
 
-# Parquet footer schemas, keyed by file path + mtime: stream_table needs a
-# declared schema per call, and a streaming query typically builds 1-4
-# sources — each footer read is a driver-side job (~50 ms) that dominates
-# nothing alone but adds up across the replay suite.  mtime in the key keeps
-# the cache honest if a corpus file is regenerated mid-session.
-_SCHEMA_CACHE: dict[tuple[str, float], object] = {}
+# Parquet footer schemas, keyed by path and validated by the path's inode +
+# mtime: a read without a schema runs one Spark job (~50-70 ms) to infer it
+# from the footers, and the engine reads the same corpus tables and staged
+# indexes over and over (6 index reads per ingest batch, 1-4 sources per
+# streaming query).  Only the schema is cached — the file listing stays
+# live, so an append, merge or compaction is seen by the next read.  A
+# rewrite (Spark's overwrite deletes and recreates the directory, an append
+# adds entries to it) moves the stamp, so the next read re-infers.
+_SCHEMA_CACHE: dict[str, tuple[tuple[int, int], object]] = {}
 
 
 def _table_schema(spark: SparkSession, path: str):
     try:
-        mtime = os.path.getmtime(path)
-    except OSError:  # directory-style parquet or remote FS: skip caching
+        st = os.stat(path)
+    except OSError:  # not a local path (remote FS, file: URI): no caching
         return spark.read.parquet(path).schema
-    key = (path, mtime)
-    if key not in _SCHEMA_CACHE:
-        _SCHEMA_CACHE[key] = spark.read.parquet(path).schema
-    return _SCHEMA_CACHE[key]
+    stamp = (st.st_ino, st.st_mtime_ns)
+    hit = _SCHEMA_CACHE.get(path)
+    if hit is None or hit[0] != stamp:
+        hit = _SCHEMA_CACHE[path] = (stamp, spark.read.parquet(path).schema)
+    return hit[1]
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema given from the cache
+    above, so a repeated read of an unchanged table runs no Spark job."""
+    return spark.read.schema(_table_schema(spark, path)).parquet(path)
 
 
 def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

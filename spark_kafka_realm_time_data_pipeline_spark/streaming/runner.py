@@ -24,6 +24,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import scoped_conf
+
 # Shuffle-partition count for stateful streaming runs.  Every stateful
 # operator opens ONE state store PER shuffle partition PER micro-batch, and
 # a stream-stream join opens four; with RocksDB each store is a native
@@ -89,83 +91,70 @@ def run_to_memory(
     everything during the data batches — for those the trailing batch is
     pure overhead, and callers turn it off."""
     qname = name or f"mem_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{qname}_", dir=_REPLAY_CKPT_ROOT)
     # streaming profile: fewer, fuller state partitions (see
-    # STREAM_SHUFFLE_PARTITIONS); restored after the bounded replay ends so
-    # batch queries keep the session default.  conf.set and .start() sit
-    # INSIDE the try: a plan that fails analysis in .start() must not leak
-    # the streaming partition count (or the checkpoint dir) into the session.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_provider = spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-    prev_nodata = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    prev_progress = spark.conf.get(
-        "spark.sql.streaming.numRecentProgressUpdates", "100"
-    )
-    query = None
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
-        # recentProgress retains only this many entries (default 100); the
-        # bench sums numInputRows/triggerExecution over it, so a replay with
-        # more triggers than the cap would silently undercount both sides of
-        # the rows/s ratio
-        spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "10000")
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", REPLAY_STATE_PROVIDER
-        )
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled",
-            "true" if no_data_batches else "false",
-        )
-        query = (
-            df.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = query.awaitTermination(timeout_seconds)
-        if not finished:
-            raise TimeoutError(
-                f"streaming query {qname} did not finish within "
-                f"{timeout_seconds}s — refusing to return a partial result"
+    # STREAM_SHUFFLE_PARTITIONS), restored after the bounded replay ends so
+    # batch queries keep the session default.  recentProgress retains only
+    # numRecentProgressUpdates entries (default 100); the bench sums
+    # numInputRows/triggerExecution over it, so a replay with more triggers
+    # than the cap would silently undercount both sides of the rows/s ratio.
+    confs = {
+        "spark.sql.shuffle.partitions": STREAM_SHUFFLE_PARTITIONS,
+        "spark.sql.streaming.numRecentProgressUpdates": "10000",
+        "spark.sql.streaming.stateStore.providerClass": REPLAY_STATE_PROVIDER,
+        "spark.sql.streaming.noDataMicroBatches.enabled": (
+            "true" if no_data_batches else "false"
+        ),
+    }
+    with scoped_conf(spark, **confs):
+        ckpt = tempfile.mkdtemp(prefix=f"ckpt_{qname}_", dir=_REPLAY_CKPT_ROOT)
+        query = None
+        try:
+            query = (
+                df.writeStream.format("memory")
+                .queryName(qname)
+                .outputMode(output_mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
             )
-        # Ingest volume from the engine's own progress metrics.  For an
-        # aggregating stream the OUTPUT row count says nothing about
-        # throughput (a quantile sketch emits 20 rows from millions
-        # ingested), so the bench's rows/s must divide by rows PROCESSED —
-        # recorded here while the StreamingQuery object still exists.
-        input_rows = sum(
-            int(p["numInputRows"]) for p in (query.recentProgress or []) if p
-        )
-        # Engine-reported processing time: the sum of per-trigger
-        # triggerExecution durations — the denominator Spark's own
-        # processedRowsPerSecond uses.  Excludes stream start/stop, the
-        # staged-fixture fingerprint check, and the driver read-back below,
-        # all per-QUERY fixed cost; bench.py divides rows by this when
-        # present, so every runner-driven streaming line reports ingest
-        # throughput over the per-row path, not the availableNow floor.
-        proc_ms = sum(
-            int(p.get("durationMs", {}).get("triggerExecution", 0))
-            for p in (query.recentProgress or [])
-            if p
-        )
-        # Per-batch df.observe() metric rows, keyed by observation name —
-        # recorded the same way (the StreamingQuery object dies in finally).
-        observed = [
-            (p["batchId"], name, row.asDict() if hasattr(row, "asDict") else dict(row))
-            for p in (query.recentProgress or [])
-            if p
-            for name, row in (p["observedMetrics"] or {}).items()
-        ]
-    finally:
-        if query is not None:
-            query.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev_provider)
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata)
-        spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", prev_progress)
-        shutil.rmtree(ckpt, ignore_errors=True)
+            finished = query.awaitTermination(timeout_seconds)
+            if not finished:
+                raise TimeoutError(
+                    f"streaming query {qname} did not finish within "
+                    f"{timeout_seconds}s — refusing to return a partial result"
+                )
+            # Ingest volume from the engine's own progress metrics.  For an
+            # aggregating stream the OUTPUT row count says nothing about
+            # throughput (a quantile sketch emits 20 rows from millions
+            # ingested), so the bench's rows/s must divide by rows PROCESSED —
+            # recorded here while the StreamingQuery object still exists.
+            input_rows = sum(
+                int(p["numInputRows"]) for p in (query.recentProgress or []) if p
+            )
+            # Engine-reported processing time: the sum of per-trigger
+            # triggerExecution durations — the denominator Spark's own
+            # processedRowsPerSecond uses.  Excludes stream start/stop, the
+            # staged-fixture fingerprint check, and the driver read-back below,
+            # all per-QUERY fixed cost; bench.py divides rows by this when
+            # present, so every runner-driven streaming line reports ingest
+            # throughput over the per-row path, not the availableNow floor.
+            proc_ms = sum(
+                int(p.get("durationMs", {}).get("triggerExecution", 0))
+                for p in (query.recentProgress or [])
+                if p
+            )
+            # Per-batch df.observe() metric rows, keyed by observation name —
+            # recorded the same way (the StreamingQuery object dies in finally).
+            observed = [
+                (p["batchId"], name, row.asDict() if hasattr(row, "asDict") else dict(row))
+                for p in (query.recentProgress or [])
+                if p
+                for name, row in (p["observedMetrics"] or {}).items()
+            ]
+        finally:
+            if query is not None:
+                query.stop()
+            shutil.rmtree(ckpt, ignore_errors=True)
     # copy the result out of the memory sink (eager localCheckpoint) and
     # drop the sink table — otherwise every call leaks a fully materialized
     # result table for the life of the session

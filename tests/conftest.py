@@ -11,6 +11,10 @@ if REPO_ROOT not in sys.path:
 
 SF_DIR = "/root/testdata/sf0.001"
 
+# session.scoped_conf(spark, **NO_AUTO_BROADCAST): plan joins without
+# statistics-driven broadcasts, as a fact-fact join at scale would be
+NO_AUTO_BROADCAST = {"spark.sql.autoBroadcastJoinThreshold": "-1"}
+
 
 def make_envelope(customer_doc: dict | str, key: str = "Customer") -> str:
     """The Redis CDC envelope exactly as Kafka Connect emits it

@@ -10,9 +10,10 @@ plan contains NO shuffle exchange on either side.
 import pytest
 from pyspark.sql import functions as F
 
+from spark_kafka_realm_time_data_pipeline_spark.session import scoped_conf
 from spark_kafka_realm_time_data_pipeline_spark.sources.files import load_table
 
-from conftest import SF_DIR
+from conftest import NO_AUTO_BROADCAST, SF_DIR
 
 N_BUCKETS = 8
 
@@ -52,12 +53,8 @@ def test_bucketed_join_has_no_shuffle(spark, bucketed_tables):
     # force the SMJ path (at test scale Catalyst auto-broadcasts the tiny
     # side, hiding the property under test: bucket co-location removes the
     # join exchanges that a 100 TB fact-fact join would otherwise pay)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    with scoped_conf(spark, **NO_AUTO_BROADCAST):
         plan = joined._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     # co-located: the join itself must not exchange either side (the final
     # small group-by agg may still shuffle — that's expected and cheap)
     join_section = plan.split("HashAggregate")[-1]

@@ -10,7 +10,6 @@ Kafka wire schema, through a memory sink — catching column-name or schema
 typos the builder-only unit tests (tests/test_sinks.py) can't.
 """
 
-import tempfile
 import time
 
 from pyspark.sql import functions as F
@@ -35,7 +34,7 @@ def _as_kafka_wire(df, value_col: str):
     )
 
 
-def test_rate_source_drives_full_stedi_assembly(spark):
+def test_rate_source_drives_full_stedi_assembly(spark, tmp_path):
     # customers: rate value -> derived identity -> Redis CDC envelope wire
     cust_enriched = (
         spark.readStream.format("rate")
@@ -88,7 +87,7 @@ def test_rate_source_drives_full_stedi_assembly(spark):
         out.writeStream.format("memory")
         .queryName("rate_stedi_smoke")
         .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="rate_smoke_ckpt_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(processingTime="1 second")
         .start()
     )

@@ -75,6 +75,9 @@ ALLOWED_BNLJ = {
 # Queries whose final frame is a localCheckpoint barrier: their real
 # joins/shuffles run in pre-barrier stage jobs, which the audit must see.
 BARRIER_FINAL = {
+    # the funnel returns its decisions pinned inside its AQE-off scope
+    "ingest_admission",
+    "ingest_admission_day2",
     "ingest_index_merge",
     "dedup_incremental",
     "dedup_containment",

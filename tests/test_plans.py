@@ -9,8 +9,9 @@ SMJ/shuffled-hash, dims still broadcast, and scans prune columns.
 import pytest
 
 from spark_kafka_realm_time_data_pipeline_spark.queries import registry
+from spark_kafka_realm_time_data_pipeline_spark.session import scoped_conf
 
-from conftest import SF_DIR
+from conftest import NO_AUTO_BROADCAST, SF_DIR
 
 
 def _plan(spark, name: str) -> str:
@@ -25,12 +26,8 @@ def test_fact_fact_join_not_hint_broadcast(spark, name):
     (At test scale Catalyst auto-broadcasts orders because its *statistics*
     are tiny; that is correct stats-driven planning.  The defect was the
     hint, which ignores statistics and OOMs at 100x.)"""
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    with scoped_conf(spark, **NO_AUTO_BROADCAST):
         plan = _plan(spark, name)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     # only fixed-size dims (nation=25, region=5 rows) may be hint-broadcast;
@@ -46,12 +43,8 @@ def test_theta_band_is_bucketized_equi_join(spark):
     bucketizes acctbal into width-100 bands and equi-joins on band, so with
     auto-broadcast disabled it must plan as a shuffle equi-join — never a
     nested loop, never a broadcast of supplier."""
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    with scoped_conf(spark, **NO_AUTO_BROADCAST):
         plan = _plan(spark, "join_theta_band")
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "BroadcastExchange" not in plan, plan
@@ -79,12 +72,8 @@ def test_decontaminate_is_jvm_side_equi_join(spark):
     """The gram join must stay an equi-join on the hashed key with no
     Python and, with auto-broadcast off, no broadcast of the corpus-derived
     benchmark side."""
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    with scoped_conf(spark, **NO_AUTO_BROADCAST):
         plan = _plan(spark, "ngram_decontaminate")
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert "BatchEvalPython" not in plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "BroadcastExchange" not in plan, plan
@@ -94,12 +83,8 @@ def test_decontaminate_is_jvm_side_equi_join(spark):
 def test_tpch_q7_only_nation_dims_broadcast(spark):
     """Q7's fact-fact joins must not be hint-forced: with auto-broadcast
     off, only the two 25-row nation dims may appear as BroadcastExchange."""
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    with scoped_conf(spark, **NO_AUTO_BROADCAST):
         plan = _plan(spark, "tpch_q7_volume")
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert plan.count("BroadcastExchange") <= 2, plan
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
@@ -117,12 +102,8 @@ def test_flagship_broadcast_is_stats_driven(spark):
     flip to a shuffle join (proving no hint survives); (b) with defaults the
     planner still picks broadcast-hash at this scale from statistics/AQE, so
     the small-dim fast path isn't lost."""
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    with scoped_conf(spark, **NO_AUTO_BROADCAST):
         plan_nohint = _plan(spark, "stedi_flagship")
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert "BroadcastExchange" not in plan_nohint, plan_nohint
     assert "SortMergeJoin" in plan_nohint or "ShuffledHashJoin" in plan_nohint, plan_nohint
     assert "BroadcastHashJoin" in _plan(spark, "stedi_flagship")
@@ -221,25 +202,20 @@ def test_salted_join_splits_planted_hot_key(spark):
         ]
         return max(sizes) / sum(sizes)
 
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        # force a shuffle join: a broadcast join never shuffles the fact
-        # side, hiding the very skew this fixture plants
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        # enough reducers for the 8 sub-keys to spread: the session fixture
-        # runs 4 shuffle partitions, where 8 hash cells inevitably collide.
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
+    # a broadcast join never shuffles the fact side, hiding the very skew
+    # this fixture plants; 32 reducers let the 8 sub-keys spread (the
+    # session fixture runs 4 shuffle partitions, where 8 hash cells
+    # inevitably collide)
+    confs = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": "32",
+        **NO_AUTO_BROADCAST,
+    }
+    with scoped_conf(spark, **confs):
         plain = fact.join(dim, fact.user_id == dim.c_custkey)
         plain_share = max_task_share(plain)
         salted = salted_join(fact, dim, "user_id", "c_custkey", "row_id")
         salted_share = max_task_share(salted)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
     # row parity: salting must not change the join result size
     assert salted.count() == plain.count() == n_rows
@@ -480,16 +456,10 @@ def test_aqe_skew_join_splits_planted_hot_key(spark):
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
         "spark.sql.adaptive.coalescePartitions.minPartitionSize": "512",
     }
-    saved = {k: spark.conf.get(k) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with scoped_conf(spark, **confs):
         df = fn(spark, SF_DIR)
         got = {tuple(r) for r in df.collect()}
         plan = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
     assert "skew=true" in plan, plan[:2000]
     assert "skewed" in plan, plan[:2000]
     ev = load_table(spark, SF_DIR, "events")
@@ -538,11 +508,8 @@ def test_rebalance_write_splits_hot_key_layout(spark, tmp_path):
         "spark.sql.adaptive.coalescePartitions.minPartitionSize": "512",
         "spark.sql.adaptive.rebalancePartitionsSmallPartitionFactor": "0.2",
     }
-    saved = {k: spark.conf.get(k) for k in confs}
     out = str(tmp_path / "rebal")
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with scoped_conf(spark, **confs):
         d = rebalanced_events_frame(spark, SF_DIR)
         d.write.mode("overwrite").parquet(out)
         # plan markers (collect the same frame — the write plan is the
@@ -550,9 +517,6 @@ def test_rebalance_write_splits_hot_key_layout(spark, tmp_path):
         d2 = rebalanced_events_frame(spark, SF_DIR)
         d2.collect()
         plan = d2._jdf.queryExecution().executedPlan().toString()
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
     assert "REBALANCE_PARTITIONS_BY_COL" in plan, plan[:2000]
     assert "skewed" in plan, plan[:2000]
     files = glob.glob(os.path.join(out, "part-*"))
@@ -582,21 +546,16 @@ def test_runtime_bloom_filter_injected(spark):
     fn = registry()["runtime_bloom_join"].fn
     confs = {
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        **NO_AUTO_BROADCAST,
     }
-    saved = {k: spark.conf.get(k) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with scoped_conf(spark, **confs):
         df = fn(spark, SF_DIR)
         with_bloom = {tuple(r) for r in df.collect()}
         plan = df._jdf.queryExecution().executedPlan().toString()
-        spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
-        without = {tuple(r) for r in fn(spark, SF_DIR).collect()}
-    finally:
-        spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        for k, v in saved.items():
-            spark.conf.set(k, v)
+        with scoped_conf(
+            spark, **{"spark.sql.optimizer.runtime.bloomFilter.enabled": "false"}
+        ):
+            without = {tuple(r) for r in fn(spark, SF_DIR).collect()}
     assert "might_contain" in plan, plan[:2000]
     assert "bloom_filter_agg" in plan, plan[:2000]
     assert with_bloom == without and len(with_bloom) > 0

@@ -9,6 +9,7 @@ shows PartitionFilters (pruning) rather than a post-scan filter.
 import pytest
 from pyspark.sql import functions as F
 
+from spark_kafka_realm_time_data_pipeline_spark.session import scoped_conf
 from spark_kafka_realm_time_data_pipeline_spark.sources.files import load_table
 
 from conftest import SF_DIR
@@ -55,12 +56,8 @@ def test_dynamic_partition_overwrite(spark, tmp_path_factory):
         .limit(10)
         .withColumn("value", F.lit(0.0))
     )
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    with scoped_conf(spark, **{"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         patch.write.mode("overwrite").partitionBy("event_type").parquet(out)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
 
     after = {
         tuple(r)
