@@ -83,41 +83,37 @@ def q_envelope_pyds_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Local-mode caveat (same as every foreachBatch parquet sink here): the
     sink directory is driver-local tempdir, valid because local[] workers
-    share the driver's filesystem; on a real cluster point ``path`` at
-    shared storage."""
+    share the driver's filesystem; on a real cluster set
+    ``SPARK_GRAFT_SCRATCH`` to shared storage (``runner.scratch_dir``)."""
+    import os
     import shutil
-    import tempfile
 
     from ..functions.codec import parse_stedi_events
     from ..sources.envelope_source import SOURCE_NAME, register
     from ..streaming.pipeline import synth_event_wire_stream
+    from ..streaming.runner import drain, scratch_dir
 
     register(spark)
     risk = parse_stedi_events(synth_event_wire_stream(spark, sf_dir)).select(
         "customer", "score"
     )
-    out_dir = tempfile.mkdtemp(prefix="pyds_sink_")
-    ckpt = tempfile.mkdtemp(prefix="pyds_sink_ckpt_")
+    out_dir = scratch_dir("pyds_sink_")
     try:
-        query = (
+        # the checkpoint sits beside the committed ``batch-*`` files, which
+        # are all the read-back globs
+        drain(
             risk.writeStream.format(SOURCE_NAME)
             .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
+            .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
             .trigger(availableNow=True)
             .start()
         )
-        try:
-            if not query.awaitTermination(300):
-                raise TimeoutError("python-sink replay did not finish in 300s")
-        finally:
-            query.stop()
         back = spark.read.schema("customer string, score double").json(
             f"{out_dir}/batch-*"
         )
         return back.localCheckpoint(eager=True)
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def q_cast_projection(spark: SparkSession, sf_dir: str) -> DataFrame:

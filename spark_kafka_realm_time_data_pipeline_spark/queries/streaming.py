@@ -30,7 +30,14 @@ from ..streaming.pipeline import (
     synth_customer_wire_stream,
     synth_event_wire_stream,
 )
-from ..streaming.runner import run_to_memory
+from ..streaming.runner import (
+    drain,
+    run_foreach_batch,
+    run_to_memory,
+    scratch_dir,
+    stamp,
+)
+from ..streaming.sinks import foreach_batch_sink
 from . import QuerySpec
 from .reference import _ORA_BIRTHYEAR, _ORA_EMAIL
 from .relational import FMT_DUCK as _FMT_DUCK
@@ -524,17 +531,16 @@ def q_state_store_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream; at 100 TB you point it at the production checkpoint on S3/
     HDFS and read only the operator/batch you care about."""
     import shutil
-    import tempfile
 
     ev = stream_table(spark, sf_dir, "events")
     agg = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.col("value").cast("decimal(12,2)")).alias("sum_value"),
     )
-    ckpt = tempfile.mkdtemp(prefix="state_inspect_")
+    ckpt = scratch_dir("state_inspect_")
     qname = f"state_inspect_{os.path.basename(ckpt)[-6:]}"
     try:
-        query = (
+        drain(
             agg.writeStream.format("memory")
             .queryName(qname)
             .outputMode("complete")
@@ -542,11 +548,6 @@ def q_state_store_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        try:
-            if not query.awaitTermination(300):
-                raise TimeoutError("state-inspect replay did not finish in 300s")
-        finally:
-            query.stop()
         spark.catalog.dropTempView(qname)
         st = spark.read.format("statestore").load(ckpt)
         # buffer fields use the PHYSICAL aggregate names (count/sum), not
@@ -602,20 +603,6 @@ GROUP BY 1, 2, 3
 """
 
 
-def _progress_totals(query) -> tuple[int, float]:
-    """(rows ingested, engine processing seconds) from a finished
-    StreamingQuery's recentProgress — numInputRows summed across triggers
-    and the summed triggerExecution durations, the same denominator
-    Spark's own processedRowsPerSecond uses (and the runner records for
-    memory-sink replays).  Call BEFORE query.stop()."""
-    progress = [p for p in (query.recentProgress or []) if p]
-    input_rows = sum(int(p["numInputRows"]) for p in progress)
-    proc_ms = sum(
-        int(p.get("durationMs", {}).get("triggerExecution", 0)) for p in progress
-    )
-    return input_rows, proc_ms / 1000.0
-
-
 def _carry_stream_metrics(dst: DataFrame, src) -> DataFrame:
     """Forward the runner's ingest/processing metrics onto a DERIVED frame
     so bench's rows/s divides rows PROCESSED by ENGINE time, not by the fn
@@ -625,29 +612,6 @@ def _carry_stream_metrics(dst: DataFrame, src) -> DataFrame:
     if proc:
         dst.stream_processing_secs = proc
     return dst
-
-
-def _scratch_dir(prefix: str) -> str:
-    """Scratch dir for foreachBatch parquet sinks.  Defaults to a local
-    tempdir (correct in local[] mode where executors share the driver's
-    filesystem); set ``SPARK_GRAFT_SCRATCH`` to a shared-FS path (S3A/HDFS/
-    NFS) on a real cluster so executor writes and the driver read-back see
-    the same storage — the same rule checkpoint locations follow."""
-    import tempfile
-    import uuid
-
-    root = os.environ.get("SPARK_GRAFT_SCRATCH")
-    if root:
-        return os.path.join(root, f"{prefix}{uuid.uuid4().hex[:12]}")
-    return tempfile.mkdtemp(prefix=prefix)
-
-
-def _checkpoint_in(out_dir: str) -> str:
-    """The foreachBatch twins' stream checkpoint, kept inside their scratch
-    dir so the ``finally`` that removes the dir removes it too.  Spark's
-    file listing skips ``_``-prefixed entries, so reading ``out_dir`` back
-    as parquet never sees it."""
-    return os.path.join(out_dir, "_checkpoint")
 
 
 _INTERVAL_S = 1800  # attribution lookback: click within 30 min before purchase
@@ -841,51 +805,22 @@ def q_streaming_foreachbatch_topk(spark: SparkSession, sf_dir: str) -> DataFrame
     aggregate; the batch hook ranks and overwrites the serving table, so
     the final replay leaves exactly the top event type per hour on disk.
     Everything inside the hook is a distributed plan — no driver collect."""
-    import shutil
-
     from pyspark.sql import Window as W
-
-    from ..streaming.sinks import foreach_batch_sink
 
     ev = stream_table(spark, sf_dir, "events")
     agg = ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type").agg(
         F.count(F.lit(1)).alias("n_events")
     )
-    out_dir = _scratch_dir("feb_topk_")
-    # complete mode overwrites the result each batch; keep it in a subdir
-    # so the overwrite leaves the checkpoint beside it alone
-    topk_dir = os.path.join(out_dir, "topk")
 
-    def write_topk(batch_df: DataFrame, batch_id: int) -> None:
+    def topk(batch_df: DataFrame) -> DataFrame:
         rank_w = W.partitionBy("w").orderBy(F.desc("n_events"), "event_type")
-        (
+        return (
             batch_df.withColumn("rn", F.row_number().over(rank_w))
             .filter(F.col("rn") == 1)
             .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
-            .write.mode("overwrite")
-            .parquet(topk_dir)
         )
 
-    # one try/finally owns the temp dir for the WHOLE run+read, so a stream
-    # error or awaitTermination timeout can't leak it
-    try:
-        query = foreach_batch_sink(
-            agg, write_topk, output_mode="complete",
-            checkpoint_dir=_checkpoint_in(out_dir),
-        )
-        try:
-            if not query.awaitTermination(300):
-                raise TimeoutError("foreachBatch top-k replay did not finish in 300s")
-            input_rows, proc_secs = _progress_totals(query)
-        finally:
-            query.stop()
-        out = spark.read.parquet(topk_dir).localCheckpoint(eager=True)
-        out.stream_input_rows = input_rows
-        if proc_secs > 0:
-            out.stream_processing_secs = proc_secs
-        return out
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+    return run_foreach_batch(agg, spark, topk, output_mode="complete")
 
 
 ORA_STREAMING_FEB_TOPK = """
@@ -1096,10 +1031,7 @@ def q_streaming_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     ``SPARK_GRAFT_SCRATCH`` (S3/HDFS/NFS path), exactly like checkpoint
     dirs — otherwise each executor writes to its own local disk and the
     driver-side read-back sees partial data."""
-    import shutil
-
     from ..operators import dedup as D
-    from ..streaming.sinks import foreach_batch_sink
     from .llm import staged_base_index
 
     docs = stream_table(spark, sf_dir, "documents")
@@ -1124,50 +1056,11 @@ def q_streaming_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
         .select("x.doc_id", "x.text")
     )
     idx = staged_base_index(spark, sf_dir)
-    out_dir = _scratch_dir("stream_incdedup_")
-
-    def match_batch(batch_df: DataFrame, batch_id: int) -> None:
-        matches = D.incremental_near_dup_batch(spark, idx, batch_df, threshold=0.8)
-        # repartition(1), NOT coalesce(1): matches are a few-k-row frame and
-        # one file per trigger keeps the append sink from accreting tiny
-        # files — but coalesce would propagate the 1-partition constraint UP
-        # the (linear, shuffle-free) verify plan and single-thread the whole
-        # base scan; the repartition exchange is a barrier that keeps the
-        # scan parallel and moves only the final tiny rows.
-        matches.repartition(1).write.mode("append").parquet(out_dir)
-
-    try:
-        query = foreach_batch_sink(
-            delta, match_batch, output_mode="append",
-            checkpoint_dir=_checkpoint_in(out_dir),
-        )
-        try:
-            if not query.awaitTermination(300):
-                raise TimeoutError(
-                    "incremental-dedup stream replay did not finish in 300s"
-                )
-            progress = [p for p in (query.recentProgress or []) if p]
-            input_rows = sum(int(p["numInputRows"]) for p in progress)
-            # engine-reported processing time: sum of per-trigger
-            # triggerExecution durations — the denominator Spark's own
-            # processedRowsPerSecond uses.  Excludes stream start/stop and
-            # the driver-side read-back below, which are per-QUERY setup,
-            # not per-row cost (bench divides by this when present).
-            proc_ms = sum(
-                int(p.get("durationMs", {}).get("triggerExecution", 0))
-                for p in progress
-            )
-        finally:
-            query.stop()
-        out = spark.read.parquet(out_dir).localCheckpoint(eager=True)
-        # ingest throughput for bench rows/s (matches found says nothing
-        # about how many delta docs were processed)
-        out.stream_input_rows = input_rows
-        if proc_ms > 0:
-            out.stream_processing_secs = proc_ms / 1000.0
-        return out
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+    return run_foreach_batch(
+        delta,
+        spark,
+        lambda batch: D.incremental_near_dup_batch(spark, idx, batch, threshold=0.8),
+    )
 
 
 # the streaming ingest dedup is value-identical to the batch twin (one
@@ -1192,48 +1085,14 @@ def q_streaming_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Same local[]-only sink caveat as streaming_dedup_incremental: on a
     cluster route ``SPARK_GRAFT_SCRATCH`` to a shared filesystem."""
-    import shutil
-
     from ..operators import dedup as D
-    from ..streaming.sinks import foreach_batch_sink
     from .llm import _containment_delta, staged_containment_index
 
     delta = _containment_delta(stream_table(spark, sf_dir, "documents"))
     idx = staged_containment_index(spark, sf_dir)
-    out_dir = _scratch_dir("stream_containment_")
-
-    def match_batch(batch_df: DataFrame, batch_id: int) -> None:
-        matches = D.containment_vs_base_batch(spark, idx, batch_df)
-        # repartition(1), NOT coalesce(1): same rationale as the
-        # incremental twin — one file per trigger without propagating the
-        # 1-partition constraint up the broadcast-probe verify plan
-        matches.repartition(1).write.mode("append").parquet(out_dir)
-
-    try:
-        query = foreach_batch_sink(
-            delta, match_batch, output_mode="append",
-            checkpoint_dir=_checkpoint_in(out_dir),
-        )
-        try:
-            if not query.awaitTermination(300):
-                raise TimeoutError(
-                    "containment-ingest stream replay did not finish in 300s"
-                )
-            progress = [p for p in (query.recentProgress or []) if p]
-            input_rows = sum(int(p["numInputRows"]) for p in progress)
-            proc_ms = sum(
-                int(p.get("durationMs", {}).get("triggerExecution", 0))
-                for p in progress
-            )
-        finally:
-            query.stop()
-        out = spark.read.parquet(out_dir).localCheckpoint(eager=True)
-        out.stream_input_rows = input_rows
-        if proc_ms > 0:
-            out.stream_processing_secs = proc_ms / 1000.0
-        return out
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+    return run_foreach_batch(
+        delta, spark, lambda batch: D.containment_vs_base_batch(spark, idx, batch)
+    )
 
 
 # value-identical to the batch twin (one availableNow micro-batch), so it
@@ -1260,47 +1119,14 @@ def q_streaming_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Same local[]-only sink caveat as streaming_dedup_containment: on a
     cluster route ``SPARK_GRAFT_SCRATCH`` to a shared filesystem."""
-    import shutil
-
     from ..operators import similarity as S
-    from ..streaming.sinks import foreach_batch_sink
     from .llm import _ann_delta, staged_ivf_index
 
     delta = _ann_delta(stream_table(spark, sf_dir, "embeddings"))
     idx = staged_ivf_index(spark, sf_dir)
-    out_dir = _scratch_dir("stream_sim_topk_")
-
-    def match_batch(batch_df: DataFrame, batch_id: int) -> None:
-        matches = S.ann_vs_base_batch(spark, idx, batch_df)
-        # repartition(1), NOT coalesce(1): one file per trigger without
-        # propagating the 1-partition constraint up the probe plan
-        matches.repartition(1).write.mode("append").parquet(out_dir)
-
-    try:
-        query = foreach_batch_sink(
-            delta, match_batch, output_mode="append",
-            checkpoint_dir=_checkpoint_in(out_dir),
-        )
-        try:
-            if not query.awaitTermination(300):
-                raise TimeoutError(
-                    "ANN-ingest stream replay did not finish in 300s"
-                )
-            progress = [p for p in (query.recentProgress or []) if p]
-            input_rows = sum(int(p["numInputRows"]) for p in progress)
-            proc_ms = sum(
-                int(p.get("durationMs", {}).get("triggerExecution", 0))
-                for p in progress
-            )
-        finally:
-            query.stop()
-        out = spark.read.parquet(out_dir).localCheckpoint(eager=True)
-        out.stream_input_rows = input_rows
-        if proc_ms > 0:
-            out.stream_processing_secs = proc_ms / 1000.0
-        return out
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+    return run_foreach_batch(
+        delta, spark, lambda batch: S.ann_vs_base_batch(spark, idx, batch)
+    )
 
 
 # value-identical to the batch twin (availableNow drain of a bounded
@@ -1321,50 +1147,22 @@ def q_streaming_sim_topk_day2(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row k=1 probe is split-safe, so the result is value-identical
     to the batch twin (sim_topk_day2) — the oracle IS that query's
     two-day replay SQL."""
-    import shutil
-
     from ..operators import similarity as S
-    from ..streaming.sinks import foreach_batch_sink
     from .llm import _ann_delta2, staged_merged_ivf_index
 
     delta2 = _ann_delta2(stream_table(spark, sf_dir, "embeddings"))
     midx = staged_merged_ivf_index(spark, sf_dir)
-    out_dir = _scratch_dir("stream_sim_day2_")
 
-    def match_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def match_batch(batch_df: DataFrame) -> DataFrame:
         top1 = S.ann_vs_base_batch(spark, midx, batch_df, k=1)
-        top1.select(
+        return top1.select(
             "query_id",
             "neighbor_id",
             "cosine",
             (F.col("cosine") >= 0.99).alias("is_dup"),
-        ).repartition(1).write.mode("append").parquet(out_dir)
-
-    try:
-        query = foreach_batch_sink(
-            delta2, match_batch, output_mode="append",
-            checkpoint_dir=_checkpoint_in(out_dir),
         )
-        try:
-            if not query.awaitTermination(300):
-                raise TimeoutError(
-                    "day-2 ANN stream replay did not finish in 300s"
-                )
-            progress = [p for p in (query.recentProgress or []) if p]
-            input_rows = sum(int(p["numInputRows"]) for p in progress)
-            proc_ms = sum(
-                int(p.get("durationMs", {}).get("triggerExecution", 0))
-                for p in progress
-            )
-        finally:
-            query.stop()
-        out = spark.read.parquet(out_dir).localCheckpoint(eager=True)
-        out.stream_input_rows = input_rows
-        if proc_ms > 0:
-            out.stream_processing_secs = proc_ms / 1000.0
-        return out
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+
+    return run_foreach_batch(delta2, spark, match_batch)
 
 
 # shares sim_topk_day2's two-day replay oracle verbatim
@@ -1387,16 +1185,19 @@ def q_streaming_ingest_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the result is value-identical to the batch twin
     (ingest_admission) — the oracle IS that query's SQL.
 
-    Per-gate decisions are per-row and each gate probes only STAGED
-    base state, so unlike the fit-drift twin this funnel is split-safe:
-    any micro-batch partitioning of the delta yields the same rows.
+    Split safety is measured, not built in.  The containment probe caps
+    each token's DELTA-side postings (``row_number`` over the token's
+    delta docs, ``rn <= max_posting`` in operators/dedup
+    ``_containment_probe``), so which docs share a micro-batch can change
+    what the probe flags.  On the benchmark corpus (the 6664-doc seed-1
+    delta split 1, 2 and 8 ways) the funnel's flags were identical at
+    every split, while the standalone containment probe flagged 1260,
+    1325 and 1343 docs: the extra flags fall on docs the exact gate
+    removes first.  The shared oracle checks the one-batch drain.
 
     Same local[]-only sink caveat as the other staged-index twins: on a
     cluster route ``SPARK_GRAFT_SCRATCH`` to a shared filesystem."""
-    import shutil
-
     from ..operators import ingest as I
-    from ..streaming.sinks import foreach_batch_sink
     from .llm import (
         _ingest_delta,
         staged_base_index,
@@ -1408,37 +1209,11 @@ def q_streaming_ingest_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     cidx = staged_containment_index(spark, sf_dir)
     hidx = staged_hash_index(spark, sf_dir)
     bidx = staged_base_index(spark, sf_dir)
-    out_dir = _scratch_dir("stream_ingest_adm_")
-
-    def admit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        decisions = I.ingest_admission_batch(spark, cidx, hidx, bidx, batch_df)
-        decisions.repartition(1).write.mode("append").parquet(out_dir)
-
-    try:
-        query = foreach_batch_sink(
-            delta, admit_batch, output_mode="append",
-            checkpoint_dir=_checkpoint_in(out_dir),
-        )
-        try:
-            if not query.awaitTermination(300):
-                raise TimeoutError(
-                    "ingest-admission stream replay did not finish in 300s"
-                )
-            progress = [p for p in (query.recentProgress or []) if p]
-            input_rows = sum(int(p["numInputRows"]) for p in progress)
-            proc_ms = sum(
-                int(p.get("durationMs", {}).get("triggerExecution", 0))
-                for p in progress
-            )
-        finally:
-            query.stop()
-        out = spark.read.parquet(out_dir).localCheckpoint(eager=True)
-        out.stream_input_rows = input_rows
-        if proc_ms > 0:
-            out.stream_processing_secs = proc_ms / 1000.0
-        return out
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+    return run_foreach_batch(
+        delta,
+        spark,
+        lambda batch: I.ingest_admission_batch(spark, cidx, hidx, bidx, batch),
+    )
 
 
 # value-identical to the batch twin (one availableNow drain), so it shares
@@ -1461,15 +1236,13 @@ def q_streaming_ingest_admission_day2(
     and serves today's triggers from the merged tables).  Copies and
     near-copies of yesterday's ADMISSIONS are rejected through the
     extension rows; the containment gate stays pinned to the base index
-    (rebuild-not-append).  Per-gate decisions are per-row against staged
-    state only, so the funnel is split-safe like streaming_ingest_admission:
-    any micro-batch partitioning yields the same rows, and the result is
-    value-identical to the batch twin (ingest_admission_day2) — the oracle
-    IS that query's two-day full-replay SQL."""
-    import shutil
-
+    (rebuild-not-append).  availableNow drains the bounded source in one
+    batch, so the result is value-identical to the batch twin
+    (ingest_admission_day2) — the oracle IS that query's two-day
+    full-replay SQL.  Split safety rests on the same measurement as
+    streaming_ingest_admission (the containment probe's delta-side cap
+    depends on which docs share a batch), not on construction."""
     from ..operators import ingest as I
-    from ..streaming.sinks import foreach_batch_sink
     from .llm import (
         _ingest_delta2,
         staged_containment_index,
@@ -1479,37 +1252,11 @@ def q_streaming_ingest_admission_day2(
     delta2 = _ingest_delta2(stream_table(spark, sf_dir, "documents"))
     cidx = staged_containment_index(spark, sf_dir)
     midx = staged_merged_index(spark, sf_dir)
-    out_dir = _scratch_dir("stream_ingest_day2_")
-
-    def admit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        decisions = I.ingest_admission_batch(spark, cidx, midx, midx, batch_df)
-        decisions.repartition(1).write.mode("append").parquet(out_dir)
-
-    try:
-        query = foreach_batch_sink(
-            delta2, admit_batch, output_mode="append",
-            checkpoint_dir=_checkpoint_in(out_dir),
-        )
-        try:
-            if not query.awaitTermination(300):
-                raise TimeoutError(
-                    "day-2 admission stream replay did not finish in 300s"
-                )
-            progress = [p for p in (query.recentProgress or []) if p]
-            input_rows = sum(int(p["numInputRows"]) for p in progress)
-            proc_ms = sum(
-                int(p.get("durationMs", {}).get("triggerExecution", 0))
-                for p in progress
-            )
-        finally:
-            query.stop()
-        out = spark.read.parquet(out_dir).localCheckpoint(eager=True)
-        out.stream_input_rows = input_rows
-        if proc_ms > 0:
-            out.stream_processing_secs = proc_ms / 1000.0
-        return out
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+    return run_foreach_batch(
+        delta2,
+        spark,
+        lambda batch: I.ingest_admission_batch(spark, cidx, midx, midx, batch),
+    )
 
 
 def q_streaming_quality_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1536,52 +1283,20 @@ def q_streaming_quality_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     trigger plan (pytest: test_training.test_fit_drift_split_safe).
     This replaces the r17 fail-fast guard that raised on a second
     micro-batch rather than diverge from the oracle."""
-    import os
-    import shutil
-
     from ..operators import training as TRo
     from .llm import _drift_delta, staged_fit_index
 
     fresh = _drift_delta(stream_table(spark, sf_dir, "documents"))
     idx = staged_fit_index(spark, sf_dir)
     base_fit = spark.read.parquet(os.path.join(idx, "fit"))
-    out_dir = _scratch_dir("stream_fit_drift_")
-
-    from ..streaming.sinks import foreach_batch_sink
-
-    def drift_batch(batch_df: DataFrame, batch_id: int) -> None:
-        TRo.quality_fit_stats(batch_df).repartition(1).write.mode(
-            "append"
-        ).parquet(out_dir)
-
-    try:
-        query = foreach_batch_sink(
-            fresh, drift_batch, output_mode="append",
-            checkpoint_dir=_checkpoint_in(out_dir),
-        )
-        try:
-            if not query.awaitTermination(300):
-                raise TimeoutError(
-                    "fit-drift stream replay did not finish in 300s"
-                )
-            progress = [p for p in (query.recentProgress or []) if p]
-            input_rows = sum(int(p["numInputRows"]) for p in progress)
-            proc_ms = sum(
-                int(p.get("durationMs", {}).get("triggerExecution", 0))
-                for p in progress
-            )
-        finally:
-            query.stop()
-        acc = TRo.merge_fit_stats(spark.read.parquet(out_dir))
-        out = TRo.quality_fit_drift_from_stats(base_fit, acc).localCheckpoint(
-            eager=True
-        )
-        out.stream_input_rows = input_rows
-        if proc_ms > 0:
-            out.stream_processing_secs = proc_ms / 1000.0
-        return out
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+    return run_foreach_batch(
+        fresh,
+        spark,
+        TRo.quality_fit_stats,
+        finish=lambda stats: TRo.quality_fit_drift_from_stats(
+            base_fit, TRo.merge_fit_stats(stats)
+        ),
+    )
 
 
 # value-identical to the batch twin (one availableNow drain), so it shares
@@ -1613,7 +1328,6 @@ def q_streaming_idempotent_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same local[]-only sink caveat as streaming_dedup_incremental: on a
     cluster, route ``SPARK_GRAFT_SCRATCH`` to a shared FS."""
     import shutil
-    import tempfile
 
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
@@ -1627,8 +1341,7 @@ def q_streaming_idempotent_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor("value").cast("long").alias("value_floor"),
         )
     )
-    out_dir = _scratch_dir("stream_idem_")
-    ckpt = tempfile.mkdtemp(prefix="idem_ckpt_")
+    out_dir = scratch_dir("stream_idem_")
     crash_once = {"armed": True}
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -1641,56 +1354,34 @@ def q_streaming_idempotent_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     def start():
-        return (
-            rows.writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        # the checkpoint sits inside out_dir: Spark's listing skips
+        # ``_``-prefixed entries, so the read-back never sees it
+        return foreach_batch_sink(
+            rows, sink, checkpoint_dir=os.path.join(out_dir, "_checkpoint")
         )
 
     try:
-        q1 = start()
-        crashed = False
         try:
-            q1.awaitTermination(300)
+            drain(start())
         except StreamingQueryException:
-            crashed = True
-        finally:
-            q1.stop()
-        if not crashed:
+            pass
+        else:
             raise AssertionError(
                 "injected mid-epoch crash did not surface — the restart "
                 "below would not be exercising failure recovery"
             )
-        q2 = start()
-        try:
-            if not q2.awaitTermination(300):
-                raise TimeoutError("idempotent-sink restart did not finish in 300s")
-            progress = [p for p in (q2.recentProgress or []) if p]
-            input_rows = sum(int(p["numInputRows"]) for p in progress)
-            proc_ms = sum(
-                int(p.get("durationMs", {}).get("triggerExecution", 0))
-                for p in progress
-            )
-        finally:
-            q2.stop()
+        progress = drain(start())
         out = (
             spark.read.parquet(out_dir)
             .select("event_id", "user_id", "value", "value_floor")
             .localCheckpoint(eager=True)
         )
-        # throughput accounting mirrors streaming_dedup_incremental: source
-        # rows ingested by the SUCCESSFUL run / engine-reported processing
-        # time (the crashed first attempt is failure-recovery theater, not
+        # throughput accounting: source rows ingested by the SUCCESSFUL run
+        # (the crashed first attempt is failure-recovery theater, not
         # steady-state throughput)
-        out.stream_input_rows = input_rows
-        if proc_ms > 0:
-            out.stream_processing_secs = proc_ms / 1000.0
-        return out
+        return stamp(out, progress)
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 ORA_STREAMING_IDEMPOTENT_SINK = """
@@ -1762,47 +1453,22 @@ def q_streaming_mv_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet-append + final fold is the sandbox analog, and is
     value-identical under availableNow's deterministic replay).  State is
     bounded by |customers| per batch partial, never by stream length."""
-    import shutil
-
     from ..functions.numeric import dec
-    from ..streaming.sinks import foreach_batch_sink
 
-    orders = stream_table(spark, sf_dir, "orders")
-    out_dir = _scratch_dir("stream_mv_")
-
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        partial = batch_df.groupBy("o_custkey").agg(
+    def partials(batch_df: DataFrame) -> DataFrame:
+        return batch_df.groupBy("o_custkey").agg(
             F.sum(dec("o_totalprice")).alias("spend_part"),
             F.count(F.lit(1)).alias("n_part"),
         )
-        partial.write.mode("append").parquet(out_dir)
 
-    try:
-        query = foreach_batch_sink(
-            orders, fold_batch, output_mode="append",
-            checkpoint_dir=_checkpoint_in(out_dir),
+    def fold(acc: DataFrame) -> DataFrame:
+        return acc.groupBy("o_custkey").agg(
+            F.sum("spend_part").cast("double").alias("total_spent"),
+            F.sum("n_part").cast("bigint").alias("n_orders"),
         )
-        try:
-            if not query.awaitTermination(300):
-                raise TimeoutError("MV-maintenance stream did not finish in 300s")
-            input_rows, proc_secs = _progress_totals(query)
-        finally:
-            query.stop()
-        merged = (
-            spark.read.parquet(out_dir)
-            .groupBy("o_custkey")
-            .agg(
-                F.sum("spend_part").cast("double").alias("total_spent"),
-                F.sum("n_part").cast("bigint").alias("n_orders"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        merged.stream_input_rows = input_rows
-        if proc_secs > 0:
-            merged.stream_processing_secs = proc_secs
-        return merged
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+
+    orders = stream_table(spark, sf_dir, "orders")
+    return run_foreach_batch(orders, spark, partials, finish=fold)
 
 
 def q_streaming_scd2_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2018,38 +1684,16 @@ def q_streaming_ppl_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Same local[]-only sink caveat as streaming_dedup_incremental: on a
     cluster the parquet sink dir must be shared storage."""
-    import shutil
-
     from ..operators.curation import lm_score_docs
-    from ..streaming.sinks import foreach_batch_sink
     from .curation import staged_ppl_model
 
     docs = stream_table(spark, sf_dir, "documents")
     model = staged_ppl_model(spark, sf_dir)
-    out_dir = _scratch_dir("stream_ppl_")
-
-    def score_batch(batch_df: DataFrame, batch_id: int) -> None:
-        kept = lm_score_docs(batch_df, model).filter("keep").drop("keep")
-        kept.write.mode("append").parquet(out_dir)
-
-    try:
-        query = foreach_batch_sink(
-            docs, score_batch, output_mode="append",
-            checkpoint_dir=_checkpoint_in(out_dir),
-        )
-        try:
-            if not query.awaitTermination(300):
-                raise TimeoutError("ppl-gate stream replay did not finish in 300s")
-            input_rows, proc_secs = _progress_totals(query)
-        finally:
-            query.stop()
-        out = spark.read.parquet(out_dir).localCheckpoint(eager=True)
-        out.stream_input_rows = input_rows
-        if proc_secs > 0:
-            out.stream_processing_secs = proc_secs
-        return out
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+    return run_foreach_batch(
+        docs,
+        spark,
+        lambda batch: lm_score_docs(batch, model).filter("keep").drop("keep"),
+    )
 
 
 def q_streaming_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2175,7 +1819,7 @@ QUERIES: dict[str, QuerySpec] = {
         q_streaming_ingest_admission,
         _ORA_INGEST_ADMISSION,
         "foreachBatch admission funnel: exact-hash -> containment -> "
-        "quality gates per micro-batch vs the maintained indexes",
+        "near-dup -> quality gates per micro-batch vs the maintained indexes",
     ),
     "streaming_ingest_admission_day2": QuerySpec(
         q_streaming_ingest_admission_day2,

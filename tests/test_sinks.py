@@ -3,12 +3,14 @@ console and foreachBatch paths execute for real; the Kafka builders are
 validated structurally (they construct without a broker — failure happens
 only at connect time, which is the production path)."""
 
+import pathlib
 import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
 from spark_kafka_realm_time_data_pipeline_spark.sources.files import stream_table
+from spark_kafka_realm_time_data_pipeline_spark.streaming import runner
 from spark_kafka_realm_time_data_pipeline_spark.streaming.sinks import (
     console_sink,
     foreach_batch_sink,
@@ -56,15 +58,72 @@ def test_foreach_batch_sink_collects(spark, tmp_path):
     assert sum(n for _b, n in seen) == _events_rows(spark)
 
 
-def test_foreachbatch_twin_leaves_no_temp_dir(spark, tmp_path, monkeypatch):
-    """A foreachBatch registry twin removes everything it puts under the
-    temp dir, its stream checkpoint included."""
+@pytest.mark.parametrize(
+    "name",
+    [
+        "streaming_foreachbatch_topk",  # complete mode: overwrite per batch
+        "streaming_mv_update",  # run_foreach_batch with a finish fold
+        "streaming_idempotent_sink",  # crash + restart on one checkpoint
+        "state_store_inspect",  # memory sink + state data source read
+        "envelope_pyds_sink",  # Python data source stream writer
+    ],
+)
+def test_foreachbatch_twin_leaves_no_temp_dir(spark, tmp_path, monkeypatch, name):
+    """Every registry query that owns a scratch dir removes everything it
+    puts under the temp dir, its stream checkpoint included."""
     from spark_kafka_realm_time_data_pipeline_spark.queries import registry
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    out = registry()["streaming_foreachbatch_topk"].fn(spark, SF_DIR)
+    out = registry()[name].fn(spark, SF_DIR)
     assert out.count() > 0
     assert sorted(p.name for p in tmp_path.iterdir()) == []
+
+
+def test_drain_times_out_and_stops_the_query(spark, tmp_path, monkeypatch):
+    """A replay that does not finish raises instead of returning a partial
+    result, and is stopped on the way out."""
+    monkeypatch.setattr(runner, "DRAIN_TIMEOUT_S", 1)
+    ev = stream_table(spark, SF_DIR, "events").select("event_id")
+    q = foreach_batch_sink(
+        ev,
+        lambda batch_df, batch_id: None,
+        available_now=False,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    with pytest.raises(TimeoutError):
+        runner.drain(q)
+    assert not q.isActive
+
+
+def test_run_foreach_batch_failure_surfaces_and_cleans_up(
+    spark, tmp_path, monkeypatch
+):
+    """A per-batch operator that raises fails the replay with the stream's
+    own exception, and the scratch dir is still removed."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    ev = stream_table(spark, SF_DIR, "events").select("event_id")
+
+    def boom(batch_df):
+        raise RuntimeError("per-batch operator failed")
+
+    with pytest.raises(StreamingQueryException):
+        runner.run_foreach_batch(ev, spark, boom)
+    assert sorted(p.name for p in tmp_path.iterdir()) == []
+
+
+def test_queries_drain_through_the_runner():
+    """Bounded replays in queries/ wait and read progress only through
+    streaming.runner.drain, never by hand."""
+    qdir = pathlib.Path(runner.__file__).parent.parent / "queries"
+    offenders = [
+        f"{path.name}: {needle}"
+        for path in sorted(qdir.glob("*.py"))
+        for needle in ("awaitTermination(", "recentProgress")
+        if needle in path.read_text()
+    ]
+    assert offenders == []
 
 
 def test_kafka_builders_construct():
